@@ -63,20 +63,23 @@ def calibration() -> dict | None:
 
 
 def stop_group(proc: subprocess.Popen) -> None:
-    """Stop every process of the child's group and wait for the child."""
-    for sig in (signal.SIGTERM, signal.SIGKILL):
-        try:
-            os.killpg(proc.pid, sig)
-        except ProcessLookupError:
-            break
-        deadline = time.time() + 5
+    """Kill every process left in the child's group and wait until the
+    group is empty. By then the child has written its result, failed or
+    run out of time, so the JVM and the Python workers it leaves behind
+    hold nothing to save, and a graceful stop would only add seconds."""
+    try:
+        os.killpg(proc.pid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass
+    else:
+        deadline = time.time() + 10
         while time.time() < deadline:
             proc.poll()  # reap the leader, or the group never empties
             try:
                 os.killpg(proc.pid, 0)
             except ProcessLookupError:
                 break
-            time.sleep(0.1)
+            time.sleep(0.05)
     proc.wait()
 
 
