@@ -89,6 +89,24 @@ def probes_quiet(
     return compute_ratio(calib) <= gate and rb is not None and rb <= bw_gate
 
 
+def attempt_key(result: dict) -> tuple:
+    """Orchestrator selection key over bench attempts; the larger key
+    wins. Whole-run validity leads: a calibration_valid attempt must WIN
+    the selection, not merely stop the loop (r11 fix — a valid attempt 2
+    lost to a faster invalid attempt 1 under the old (n_valid, -value)
+    key, emitting the invalid run as the artifact of record). Then the
+    count of calibration-valid queries, then the faster headline. Only a
+    missing headline ranks last — a legitimate ``0.0`` is the fastest
+    value, not a missing one."""
+    n_valid = sum(bool(v) for v in result.get("queries_valid", {}).values())
+    value = result.get("value")
+    return (
+        1 if result.get("calibration_valid") else 0,
+        n_valid,
+        -(float("inf") if value is None else value),
+    )
+
+
 def host_calibration() -> dict:
     """Fixed micro-benchmarks timed alongside the queries so cross-round
     comparisons can be de-confounded from shared-host variance (r3: a 28%
@@ -483,25 +501,15 @@ def main() -> None:
             trail.append({"attempt": attempt, "rc": proc.returncode,
                           "error": "no JSON line"})
             continue
-        n_valid = sum(bool(v) for v in result.get("queries_valid", {}).values())
+        key = attempt_key(result)
         trail.append({
             "attempt": attempt,
             "calibration_valid": result.get("calibration_valid"),
-            "queries_valid_count": n_valid,
+            "queries_valid_count": key[1],
             "value": result.get("value"),
             "bandwidth_ratio_pre": result.get("bandwidth_ratio_pre"),
             "bandwidth_ratio_post": result.get("bandwidth_ratio_post"),
         })
-        # whole-run validity leads the key: a calibration_valid attempt
-        # must WIN the selection, not merely stop the loop (r11 fix — a
-        # valid attempt 2 lost to a faster invalid attempt 1 under the
-        # old (n_valid, -value) key, emitting the invalid run as the
-        # artifact of record)
-        key = (
-            1 if result.get("calibration_valid") else 0,
-            n_valid,
-            -(result.get("value") or float("inf")),
-        )
         if best is None or key > best_key:
             best, best_key = result, key
         if result.get("calibration_valid"):

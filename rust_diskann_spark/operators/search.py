@@ -35,15 +35,16 @@ from rust_diskann_spark.params import IndexParams
 
 RESULT_SCHEMA = "query_id BIGINT, id BIGINT, dist DOUBLE"
 
-# scan_search collects the query batch to the driver before broadcasting
-# it (the corpus side stays resident); cap the collected rows so a huge
-# batch fails loudly instead of OOMing the driver — route those through
-# the cogrouped search, which never collects (r2 ADVICE medium item).
+# cached_scan_search collects the query batch to the driver before
+# broadcasting it (the corpus side stays resident); cap the collected rows
+# so a huge batch fails loudly instead of OOMing the driver — route those
+# through the cogrouped search, which never collects (r2 ADVICE medium
+# item).
 SCAN_QUERY_COLLECT_CAP = 1_000_000
 
 
 class ScanBatchTooLarge(ValueError):
-    """Raised by :func:`scan_search` when the query batch exceeds
+    """Raised by :func:`cached_scan_search` when the query batch exceeds
     ``SCAN_QUERY_COLLECT_CAP``. The collect itself is the gate (a
     ``limit(cap+1)`` collect, evaluated exactly once) — auto mode catches
     this and reroutes to the cogrouped search, which never collects; a
@@ -315,8 +316,8 @@ def _shard_search_pdf(
     has_entries: bool,
 ) -> pd.DataFrame:
     """One shard's beam search over one query batch (the executor-side
-    kernel shared by the cogrouped and scan search paths): materialize the
-    shard as numpy, run the lockstep batch kernel, map local ordinals back
+    kernel of the cogrouped search): materialize the shard as numpy from
+    its Arrow rows, run the lockstep batch kernel, map local ordinals back
     to global ids."""
     from time import perf_counter as _pc
 
@@ -367,8 +368,9 @@ def search(
     ``index_vectors``: (shard, id, vec); ``index_graph``: (shard, id,
     neighbors, medoid) — as produced by operators.build / sources.index_store.
     """
-    # k' = k: see scan_search — README.md:157 needs only k' >= k, and
-    # per-shard rows past rank k can never survive the global rank filter
+    # k' = k: see cached_scan_search — README.md:157 needs only k' >= k,
+    # and per-shard rows past rank k can never survive the global rank
+    # filter
     per_shard_k = k
 
     # shards are 0..num_shards-1 by construction (build.assign_shards) —
@@ -428,51 +430,6 @@ def search_ids(*args, **kwargs) -> DataFrame:
     return search(*args, **kwargs).select("query_id", "rank", "id")
 
 
-def prepare_scan_side(
-    index_vectors: DataFrame, index_graph: DataFrame
-) -> DataFrame:
-    """Pre-shuffle + persist the (vectors ⋈ graph) side hash-partitioned by
-    shard, for :func:`scan_search`. Done ONCE per index handle: every
-    subsequent query batch reads the resident partitions with no corpus
-    exchange (the groupBy(shard) below the applyInPandas reuses this
-    partitioning)."""
-    graph_cols = ["shard", "id", "neighbors", "medoid"]
-    if "entries" in index_graph.columns:
-        graph_cols.append("entries")
-    side = index_vectors.join(index_graph.select(*graph_cols), ["shard", "id"])
-    n_shards = index_graph.select("shard").distinct().count()
-    return side.repartition(max(n_shards, 1), "shard").persist()
-
-
-def scan_routing_points(
-    scan_side: DataFrame, metric: str
-) -> dict[int, np.ndarray]:
-    """{shard: routing-point matrix} from a prepared scan side — the
-    medoid + FPS entry vectors of every shard, collected driver-side
-    (O(shards x entry_set) rows, independent of corpus size). Computed
-    ONCE per index handle and reused across probed query batches: the
-    scan path's analog of the broadcast path reading routing points out
-    of its resident shard list. Hamming rows stay int64 end-to-end (a
-    float64 round trip zeroes the low bits of words >= 2^53 — r3
-    ADVICE)."""
-    dtype = np.int64 if metric == "hamming" else np.float32
-    has_entries = "entries" in scan_side.columns
-    routing_filter = F.col("id") == F.col("medoid")
-    if has_entries:
-        routing_filter = routing_filter | F.array_contains(
-            "entries", F.col("id")
-        )
-    rows = (
-        scan_side.filter(routing_filter)
-        .select("shard", "vec")
-        .toPandas()
-    )
-    out: dict[int, np.ndarray] = {}
-    for sid, grp in rows.groupby("shard"):
-        out[int(sid)] = _stack_rows(grp["vec"], dtype)
-    return out
-
-
 def _collect_query_batch(queries: DataFrame) -> pd.DataFrame:
     """Capped driver-side collect of a scan-mode query batch. The collect
     itself is the gate — ``limit(cap+1)``, evaluated exactly once (r3
@@ -486,7 +443,7 @@ def _collect_query_batch(queries: DataFrame) -> pd.DataFrame:
     )
     if len(q_pd) > SCAN_QUERY_COLLECT_CAP:
         raise ScanBatchTooLarge(
-            f"scan_search query batch exceeds the collect cap "
+            f"scan-mode query batch exceeds the collect cap "
             f"{SCAN_QUERY_COLLECT_CAP}: batches this large should use the "
             "cogrouped search (mode='cogroup'), which never collects"
         )
@@ -498,7 +455,7 @@ def _probe_map_from_routing(
 ) -> dict[int, np.ndarray] | None:
     """{shard: row positions of the queries probing it} from a routing
     dict, or None for scan-all — the driver-side half of probed scan
-    search, shared by the legacy and cached paths."""
+    search."""
     sids = sorted(routing)
     if not isinstance(shard_probes, str) and shard_probes >= len(sids):
         return None
@@ -567,32 +524,47 @@ def cached_scan_search(
     shard_probes: int | str | None = None,
     routing=None,
 ) -> DataFrame:
-    """:func:`scan_search` with residency moved from a JVM-persisted
-    corpus to the node-local mmap shard cache (operators/shard_cache.py).
+    """Steady-state search for indexes LARGER than executor broadcast
+    memory: the corpus stays put, the query batch moves.
+
+    The dual of :func:`broadcast_search` with the roles flipped — Spark's
+    broadcast-join side choice applied to serving. Residency is the
+    node-local mmap shard cache (operators/shard_cache.py); each query
+    batch is collected and broadcast (the small side), and one
+    ``applyInPandas`` task per shard beam-searches its cached shard.
 
     The dispatch side is a SKELETON of shard ids — one int row per shard,
-    hash-partitioned once — so per batch the only bytes that move are the
+    range-partitioned once — so per batch the only bytes that move are the
     broadcast query batch in and the O(q·k·shards) candidate rows out:
     corpus bytes cross the JVM->Python boundary zero times in steady
-    state (the legacy path re-shipped and re-decoded every shard
-    partition every batch; decode alone was 28.5% of 5M shard-task wall).
-    A cache miss self-heals executor-side from the index parquet via
-    partition pruning, which is also what makes this correct on a
-    multi-node cluster with per-node caches.
+    state (re-shipping and re-decoding every shard partition every batch
+    cost 28.5% of 5M shard-task wall in decode alone). A cache miss
+    self-heals executor-side from the index parquet via partition
+    pruning, which is also what makes this correct on a multi-node
+    cluster with per-node caches. Use the cogrouped :func:`search` only
+    for one-shot queries or query sets too large to collect.
 
     ``skeleton`` may be a DataFrame or a zero-arg callable returning one,
-    resolved only after the query batch passes the collect gate — same
-    deferred-builder contract as :func:`scan_search`'s scan side (r4
-    ADVICE: an oversized auto-mode batch must not leave unused pinned
-    state behind)."""
+    resolved only after the query batch passes the collect gate, so an
+    oversized auto-mode batch reroutes to cogroup without leaving unused
+    pinned state behind (r4 ADVICE). ``routing`` likewise may be a dict
+    or a zero-arg callable (the index handle's memoized routing job)."""
     spark = queries.sparkSession
-    per_shard_k = k  # README.md:157 needs only k' >= k (see scan_search)
+    # per-shard k' = k: README.md:157 only requires k' >= k, and any row
+    # with global rank < k has per-shard rank < k under the same
+    # (dist, id) order — beam-sized k' inflated the merge shuffle by
+    # beam/k (51x at k=10 / beam 512) for rows the rank filter drops
+    per_shard_k = k
     metric = params.metric
     dtype = np.int64 if metric == "hamming" else np.float32
     q_pd = _collect_query_batch(queries)
     if callable(skeleton):
         skeleton = skeleton()
 
+    # probed routing (IVF-style, same semantics as broadcast mode): each
+    # shard task receives only the query rows that probe it — per-shard
+    # work drops from n_q to ~n_q * p / n_shards. Probing prunes WORK, not
+    # residency (the partition-pruning analog for an applyInPandas scan).
     probe_map: dict[int, np.ndarray] | None = None
     if shard_probes is not None and len(q_pd):
         if callable(routing):
@@ -633,289 +605,6 @@ def cached_scan_search(
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("id").asc()
     )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "dist")
-    )
-
-
-def group_shards_by_routing(
-    routing: dict, metric: str, dtype, tau: float | None = None,
-    max_pieces: int | None = None,
-) -> dict[int, list[int]]:
-    """Deterministic serving-side grouping of shards into per-cluster
-    piece sets (r9 verdict #2a), from routing geometry alone.
-
-    The kmeans+cap-split build cuts each natural cluster into several
-    pieces; auto-probing measures ~6 probes/query on the 5M/408 index
-    because a query's home-cluster pieces all route near its best
-    distance (scale_runs_r9/probe_curve_5m.json: probes/query flat at
-    mean 5.94 for every tau in [0.05, 0.50] — the pieces ARE the probe
-    set). Serving cost is then ~6 beam searches + ~6 task dispatches per
-    query. Grouping co-probed pieces under ONE TASK collapses the
-    dispatch side to ~1; the kernel calls stay per-piece (the r10
-    union-sub-graph design was cut after the r11 gated 5M measurement
-    showed its shared beam collapses recall — see
-    :func:`grouped_scan_search`).
-
-    Rule: min-linkage distance between shard routing sets, thresholded
-    by the SAME auto-probe geometry — shards u,v join when
-    ``d(u,v) <= tau * median(d(u, ·))`` (the _probe_mask rule with the
-    query at u's own routing set, where d_best = d(u,u) = 0); groups are
-    the connected components, each chunked to ``max_pieces`` (sorted
-    order) so one union can never exceed ``max_pieces`` shards of task
-    memory. Same-cluster pieces sample the same distribution, so their
-    min-linkage sits near 0 while foreign clusters sit near the median —
-    the threshold separates cleanly at any tau in the probe range.
-    Pure numpy over O(routing points²) — 408 shards x ~8 points is
-    ~10M distances, driver-side, once per index handle.
-
-    Env: ``RDS_GROUP_TAU`` (default: the auto-probe tau),
-    ``RDS_GROUP_MAX_PIECES`` (default 16)."""
-    import os
-
-    if tau is None:
-        tau = float(os.environ.get("RDS_GROUP_TAU", "0") or 0) or \
-            _auto_probe_tau()
-    if max_pieces is None:
-        max_pieces = int(os.environ.get("RDS_GROUP_MAX_PIECES", "16"))
-    sids = sorted(routing)
-    if not sids:
-        return {}
-    pts = [np.asarray(routing[s]) for s in sids]
-    starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
-    allpts = np.concatenate(pts)
-    # (n_points, n_shards) min over each shard's point set, then reduce
-    # query-rows to shards too -> (n_shards, n_shards) min-linkage
-    dmat = np.minimum.reduceat(
-        _route_dists_from_points(metric, allpts, pts, starts),
-        np.array(starts, dtype=np.int64),
-        axis=0,
-    )
-    med = np.median(dmat, axis=1)
-    edges = dmat <= (tau * med)[:, None]
-
-    parent = list(range(len(sids)))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in zip(*np.nonzero(edges)):
-        ru, rv = find(int(u)), find(int(v))
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    comps: dict[int, list[int]] = {}
-    for i, s in enumerate(sids):
-        comps.setdefault(find(i), []).append(s)
-    groups: dict[int, list[int]] = {}
-    for root_ in sorted(comps):
-        mem = sorted(comps[root_])
-        for lo in range(0, len(mem), max_pieces):
-            groups[len(groups)] = mem[lo : lo + max_pieces]
-    return groups
-
-
-def grouped_scan_search(
-    queries: DataFrame,
-    groups: dict[int, list[int]],
-    index_path: str,
-    token: str,
-    root: str,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    routing=None,
-    skeleton=None,
-) -> DataFrame:
-    """:func:`cached_scan_search` with the task unit raised from one
-    shard to one PIECE GROUP (:func:`group_shards_by_routing`): each
-    task serves every probed member piece of its group from the mmap
-    cache, so a query's ~6 home-cluster pieces cost ONE task dispatch
-    (plus one kernel call per probed piece) instead of ~6 dispatches —
-    the per-probe-cost lever for the 5M serving bar (r9 verdict #2).
-
-    r11: the original r10 design additionally UNIONED the group's
-    pieces into one block-diagonal sub-graph and ran a single shared
-    beam over it (shard_cache get_or_merge/merge_tuples). The first
-    gated at-scale measurement falsified that design's recall premise:
-    on the 5M/408 index, grouped union serving measured recall@10
-    0.2312 vs 0.9922 singleton at beam 512 (scale_runs_r11), and a
-    driver-side isolation pinned the cause to the shared beam over
-    disconnected near-identical blocks — NOT dispatch, quant, or the
-    mmap roundtrip (probing all 64 groups left recall unchanged at
-    0.2338; quant-off and reloaded-union runs were bit-identical; beam
-    3072 only reached 0.41). One beam over b sibling pieces needs ~b x
-    budget, which erases the kernel saving. The union path was
-    therefore cut; what remains is the dispatch amortization, with
-    results BIT-IDENTICAL to the singleton cached scan: the per-shard
-    probe map is computed exactly as in :func:`cached_scan_search`, and
-    each group task runs the same per-piece kernel calls the singleton
-    path would have run, just without ~6x task/scheduling/Arrow
-    overhead. ``routing`` (the per-SHARD routing dict) is required when
-    ``shard_probes`` is set — the handle's memoized routing job
-    provides it. Results follow the same README.md:157 merge
-    contract."""
-    spark = queries.sparkSession
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    q_pd = _collect_query_batch(queries)
-    items = sorted((g, [int(s) for s in sids]) for g, sids in groups.items())
-    if callable(skeleton):
-        skeleton = skeleton()
-    if skeleton is None:
-        skeleton = spark.createDataFrame(
-            items, "grp INT, sids ARRAY<INT>"
-        ).repartitionByRange(max(len(items), 1), "grp")
-
-    # the probe map is per SHARD — identical to cached_scan_search's —
-    # so each piece serves exactly the queries the singleton path would
-    # have routed to it (bit-identical results; r11, see docstring)
-    probe_map: dict[int, np.ndarray] | None = None
-    if shard_probes is not None and len(q_pd):
-        if callable(routing):
-            routing = routing()
-        if routing is None:
-            raise ValueError(
-                "grouped_scan_search with shard_probes needs the per-shard "
-                "routing dict (the index handle memoizes it)"
-            )
-        probe_map = _probe_map_from_routing(
-            q_pd, routing, metric, dtype, shard_probes
-        )
-    bc = spark.sparkContext.broadcast((q_pd, probe_map))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time import perf_counter as _pc
-
-        from rust_diskann_spark.operators import shard_cache
-
-        _t0 = _pc()
-        sids = [int(x) for x in pdf["sids"].iloc[0]]
-        q_all, pmap = bc.value
-        parts = []
-        for sid in sids:
-            q_sel = q_all
-            if pmap is not None:
-                sel = pmap.get(sid)
-                q_sel = q_all.iloc[sel if sel is not None else []]
-            if len(q_sel) == 0:
-                continue
-            tup = shard_cache.get_or_decode(
-                root, token, sid, index_path, metric
-            )
-            if tup is None or tup is shard_cache.EMPTY:
-                continue
-            parts.append(
-                _search_decoded(
-                    tup, q_sel, metric, dtype, k, beam_width, t0=_t0,
-                    source="group",
-                )
-            )
-        if not parts:
-            return _empty_result_pdf()
-        return pd.concat(parts, ignore_index=True)
-
-    candidates = skeleton.groupBy("grp").applyInPandas(
-        run, schema=RESULT_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "dist")
-    )
-
-
-def scan_search(
-    queries: DataFrame,
-    scan_side: DataFrame,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    routing=None,
-) -> DataFrame:
-    """Steady-state search for indexes LARGER than executor broadcast
-    memory: the corpus stays put, the query batch moves.
-
-    The dual of :func:`broadcast_search` with the roles flipped — exactly
-    Spark's broadcast-join side choice applied to serving: the index side
-    (huge) is pre-partitioned by shard and persisted
-    (:func:`prepare_scan_side`, one shuffle EVER); each query batch is
-    collected and broadcast (small side), and one ``applyInPandas`` task
-    per shard beam-searches the resident shard against every query. Per
-    batch the only exchange is the final top-k merge, carrying
-    O(q · k' · shards) rows — corpus bytes never move again, unlike the
-    cogrouped :func:`search`, which re-exchanges the corpus every batch.
-    Use cogrouped search only for one-shot queries or query sets too large
-    to collect (> ~1M rows).
-
-    ``scan_side`` may be a DataFrame or a ZERO-ARG CALLABLE returning one:
-    the callable is resolved only AFTER the query batch passes the collect
-    cap, so an oversized first batch in auto mode reroutes to the cogroup
-    path without ever paying the one-time corpus shuffle (and without
-    leaving a never-used persisted scan side in executor storage —
-    r4 ADVICE).
-    """
-    spark = queries.sparkSession
-    # per-shard k' = k: README.md:157 only requires k' >= k, and any row
-    # with global rank < k has per-shard rank < k under the same
-    # (dist, id) order — beam-sized k' inflated the merge shuffle by
-    # beam/k (51x at k=10 / beam 512) for rows the rank filter drops
-    per_shard_k = k
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    q_pd = _collect_query_batch(queries)
-    if callable(scan_side):
-        scan_side = scan_side()
-    has_entries = "entries" in scan_side.columns
-
-    # probed routing (IVF-style, same semantics as broadcast mode): the
-    # routing matrix is computed ONCE per batch on the driver from the
-    # per-shard medoid + entry points, and each shard task receives only
-    # the query rows that probe it — per-shard work drops from n_q to
-    # ~n_q * p / n_shards. The corpus partitions stay resident either
-    # way; probing prunes WORK, not residency (the partition-pruning
-    # analog for an applyInPandas scan).
-    probe_map: dict[int, np.ndarray] | None = None
-    if shard_probes is not None and len(q_pd):
-        # ``routing`` may be a prebuilt dict, a zero-arg callable (the
-        # index handle's cache — resolved only now, after the batch gate
-        # and the scan-side build, mirroring the scan_side builder), or
-        # None (computed here, uncached)
-        if callable(routing):
-            routing = routing()
-        if routing is None:
-            routing = scan_routing_points(scan_side, metric)
-        probe_map = _probe_map_from_routing(
-            q_pd, routing, metric, dtype, shard_probes
-        )
-    bc = spark.sparkContext.broadcast((q_pd, probe_map))
-
-    def run(index_pdf: pd.DataFrame) -> pd.DataFrame:
-        q_all, pmap = bc.value
-        q_sel = q_all
-        if pmap is not None and len(index_pdf):
-            sel = pmap.get(int(index_pdf["shard"].iloc[0]))
-            q_sel = (
-                q_all.iloc[sel if sel is not None else []]
-            )
-        return _shard_search_pdf(
-            index_pdf, q_sel, metric, dtype, per_shard_k, beam_width,
-            has_entries,
-        )
-
-    candidates = scan_side.groupBy("shard").applyInPandas(
-        lambda pdf: run(pdf), schema=RESULT_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
         candidates.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -1085,7 +774,7 @@ def _route_dists_from_points(
     metric, qmat: np.ndarray, pts: list, seg_starts: list
 ) -> np.ndarray:
     """Metric core of :func:`_shard_route_dists`, shared with the scan
-    path (which sources its routing points from the persisted scan side
+    path (which sources its routing points from the mmap shard cache
     rather than a broadcast shard list): ``pts`` is a per-shard list of
     routing-point matrices, reduced segment-min over the concatenation."""
     if metric == "hamming":

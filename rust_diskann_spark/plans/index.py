@@ -108,21 +108,15 @@ class DiskANNIndex:
     meta: index_store.IndexMetadata
     vectors: DataFrame  # (shard, id, vec)
     graph: DataFrame  # (shard, id, neighbors, medoid)
-    # on-disk index directory; None for a handle over derived frames.
-    # File-backed handles serve scan mode through the node-local mmap
-    # shard cache (operators/shard_cache.py) — the DiskANN-style
-    # disk-resident path
-    path: str | None = None
+    # on-disk index directory: scan mode serves through the node-local
+    # mmap shard cache (operators/shard_cache.py), whose misses self-heal
+    # from this directory's parquet — the DiskANN-style disk-resident path
+    path: str
     # lazily-built broadcast of the materialized shards (broadcast search
     # mode) — built once, reused by every query batch; sound because an
     # index is immutable once built (reference has no insert-after-build,
     # SURVEY §2.5)
     _shards_bc: object = None
-    # lazily-built scan side (LEGACY scan search mode, non-file-backed
-    # indexes or RDS_SCAN_CACHE=0): (vectors ⋈ graph) hash-partitioned by
-    # shard and persisted — the one-time corpus shuffle that lets every
-    # later query batch run with zero corpus movement
-    _scan_side: object = None
     # lazily-collected {shard: routing-point matrix} for probed scan
     # search — O(shards x entry_set) driver memory, one tiny job ever
     _scan_routing: object = None
@@ -131,24 +125,16 @@ class DiskANNIndex:
     # and the index's content-derived cache token
     _skeleton: object = None
     _cache_token: str | None = None
-    # piece-group serving state (group_pieces=True): the routing-derived
-    # {gid: [sids]} grouping and its persisted (grp, sids) skeleton
-    _groups: object = None
-    _group_skeleton: object = None
 
     def _broadcast_shards(self):
         if self._shards_bc is None:
-            if (
-                self._use_scan_cache()
-                and not self._fits_broadcast()
-                and not self._broadcast_feasible()
-            ):
-                # explicit broadcast mode on an INFEASIBLY large
-                # file-backed index: serve the shard map from the
-                # node-local mmap cache instead of a real broadcast —
-                # one page-cache copy per node rather than one unpickled
-                # copy PER WORKER (the r7 5M attempt OOM-killed the JVM
-                # at 51 GB RSS exactly this way). Populate the cache with
+            if not self._fits_broadcast() and not self._broadcast_feasible():
+                # explicit broadcast mode on an INFEASIBLY large index:
+                # serve the shard map from the node-local mmap cache
+                # instead of a real broadcast — one page-cache copy per
+                # node rather than one unpickled copy PER WORKER (the r7
+                # 5M attempt OOM-killed the JVM at 51 GB RSS exactly this
+                # way). Populate the cache with
                 # the distributed routing job first (one shard per task)
                 # so the first query batch doesn't have 32 workers racing
                 # to decode the same shards.
@@ -174,65 +160,13 @@ class DiskANNIndex:
                 )
         return self._shards_bc
 
-    def _get_scan_side(self):
-        if self._scan_side is None:
-            self._scan_side = search_ops.prepare_scan_side(
-                self.vectors, self.graph
-            )
-            self._scan_side.count()
-        return self._scan_side
-
     def _get_scan_routing(self):
         if self._scan_routing is None:
-            if self._use_scan_cache():
-                self._scan_routing = search_ops.cached_scan_routing(
-                    self._get_skeleton(), self.path, self._get_cache_token(),
-                    shard_cache.cache_root(), self.meta.metric,
-                )
-            else:
-                self._scan_routing = search_ops.scan_routing_points(
-                    self._get_scan_side(), self.meta.metric
-                )
+            self._scan_routing = search_ops.cached_scan_routing(
+                self._get_skeleton(), self.path, self._get_cache_token(),
+                shard_cache.cache_root(), self.meta.metric,
+            )
         return self._scan_routing
-
-    def _get_groups(self):
-        """Memoized routing-derived piece grouping (one driver-side
-        numpy pass over the routing dict, once per handle)."""
-        if self._groups is None:
-            metric = self.meta.metric
-            dtype = np.int64 if metric == "hamming" else np.float32
-            self._groups = search_ops.group_shards_by_routing(
-                self._get_scan_routing(), metric, dtype
-            )
-        return self._groups
-
-    def _get_group_skeleton(self):
-        """Persisted (grp, sids) dispatch frame for grouped scan —
-        one range-partition per group, same layout rationale as
-        :meth:`_get_skeleton`."""
-        if self._group_skeleton is None:
-            items = sorted(
-                (g, [int(s) for s in sids])
-                for g, sids in self._get_groups().items()
-            )
-            sk = (
-                self.spark.createDataFrame(items, "grp INT, sids ARRAY<INT>")
-                .repartitionByRange(max(len(items), 1), "grp")
-                .persist()
-            )
-            sk.count()
-            self._group_skeleton = sk
-        return self._group_skeleton
-
-    def _use_scan_cache(self) -> bool:
-        """Scan mode rides the node-local mmap shard cache when the index
-        is file-backed (the only way a worker-side cache miss can
-        self-heal via partition-pruned parquet reads). ``RDS_SCAN_CACHE=0``
-        forces the legacy JVM-persisted scan side — read per call so a
-        session can flip it."""
-        return self.path is not None and os.environ.get(
-            "RDS_SCAN_CACHE", "1"
-        ) != "0"
 
     def _get_cache_token(self) -> str:
         if self._cache_token is None:
@@ -317,7 +251,6 @@ class DiskANNIndex:
         query_blocks: int | None = None,
         shard_probes: int | str | None = None,
         mode: str = "auto",
-        group_pieces: bool = False,
     ) -> DataFrame:
         """Reference A7 (lib.rs:635-693): (query_id, rank, id, dist).
         ``shard_probes`` (broadcast + scan modes): IVF-style shard
@@ -350,12 +283,12 @@ class DiskANNIndex:
           broadcast variable and search is ONE narrow mapInPandas over
           queries — zero shuffles (the reference's own regime: a
           RAM-resident index, parallel query batch, README.md:120-134).
-        - **scan mode** otherwise (the 100 TB steady-state path): the
-          index side is hash-partitioned by shard + persisted ONCE; each
-          query batch is collected + broadcast (the small side) and one
-          task per shard searches the resident shard. Per batch, only the
-          top-k merge shuffles (O(q*k'*shards) rows) — corpus bytes never
-          move again.
+        - **scan mode** otherwise (the 100 TB steady-state path): each
+          shard lives in the node-local mmap shard cache, decoded once per
+          node from the index parquet; each query batch is collected +
+          broadcast (the small side) and one task per shard-id skeleton
+          row searches the cached shard. Per batch, only the top-k merge
+          shuffles (O(q*k'*shards) rows) — corpus bytes never move.
         - **cogrouped mode** (explicit only): corpus and queries cogroup-
           exchange per batch. Right only for one-shot searches or query
           sets too large to collect; ``query_blocks=None`` sizes task
@@ -374,28 +307,9 @@ class DiskANNIndex:
             raise ValueError(
                 f"mode must be auto|broadcast|scan|cogroup, got {mode!r}"
             )
-        if group_pieces and (
-            mode not in ("auto", "scan") or not self._use_scan_cache()
-        ):
-            # grouping lives in the mmap-cache serving layer (the union
-            # sub-graph is a cache entry); the other strategies have no
-            # home for it — silently ignoring the knob would misreport
-            # the measured configuration (same rationale as the cogroup
-            # shard_probes guard)
-            raise ValueError(
-                "group_pieces requires the cached scan path "
-                "(mode auto|scan on a file-backed index with "
-                "RDS_SCAN_CACHE enabled)"
-            )
         use_broadcast = mode == "broadcast" or (
             mode == "auto" and self._fits_broadcast()
         )
-        if group_pieces and use_broadcast:
-            raise ValueError(
-                "group_pieces requires the cached scan path; this index "
-                "fits broadcast under mode='auto' — pass mode='scan' to "
-                "force the scan strategy"
-            )
         if shard_probes is not None and mode == "cogroup":
             # cogroup replicates every query to every shard inside the
             # exchange — silently ignoring the routing knob would hand
@@ -417,44 +331,17 @@ class DiskANNIndex:
             # cogrouped search (which never collects) instead of OOMing the
             # driver; explicit scan mode propagates the error.
             try:
-                if self._use_scan_cache():
-                    if group_pieces:
-                        # task unit = one piece GROUP: a query's ~6
-                        # home-cluster cap-split pieces cost one task
-                        # dispatch instead of ~6; kernel calls stay
-                        # per-piece, results bit-identical to the
-                        # singleton cached scan (r11 — see
-                        # operators/search.py grouped_scan_search)
-                        return search_ops.grouped_scan_search(
-                            queries, self._get_groups(), self.path,
-                            self._get_cache_token(),
-                            shard_cache.cache_root(),
-                            self.params, k, beam_width,
-                            shard_probes=shard_probes,
-                            routing=self._get_scan_routing
-                            if shard_probes is not None
-                            else None,
-                            skeleton=self._get_group_skeleton,
-                        )
-                    # file-backed index: residency is the node-local mmap
-                    # shard cache; the dispatch side is the shard-id
-                    # skeleton, so no corpus bytes ever shuffle or persist
-                    # in the JVM (operators/shard_cache.py)
-                    return search_ops.cached_scan_search(
-                        queries, self._get_skeleton, self.path,
-                        self._get_cache_token(), shard_cache.cache_root(),
-                        self.params, k, beam_width,
-                        shard_probes=shard_probes,
-                        routing=self._get_scan_routing
-                        if shard_probes is not None
-                        else None,
-                    )
-                # pass the scan-side BUILDER, not the built side: scan_search
-                # gates the query batch first, so an oversized batch falls
-                # through to cogroup without paying the one-time corpus
-                # shuffle or leaving an unused persist behind (r4 ADVICE)
-                return search_ops.scan_search(
-                    queries, self._get_scan_side, self.params, k, beam_width,
+                # residency is the node-local mmap shard cache; the
+                # dispatch side is the shard-id skeleton, so no corpus
+                # bytes ever shuffle or persist in the JVM
+                # (operators/shard_cache.py). Pass the skeleton BUILDER:
+                # the batch is gated first, so an oversized batch falls
+                # through to cogroup without leaving an unused persist
+                # behind (r4 ADVICE)
+                return search_ops.cached_scan_search(
+                    queries, self._get_skeleton, self.path,
+                    self._get_cache_token(), shard_cache.cache_root(),
+                    self.params, k, beam_width,
                     shard_probes=shard_probes,
                     routing=self._get_scan_routing
                     if shard_probes is not None
@@ -463,15 +350,6 @@ class DiskANNIndex:
             except search_ops.ScanBatchTooLarge:
                 if mode == "scan":
                     raise
-                if group_pieces:
-                    # the cogroup fallback has no union-cache serving
-                    # layer — surface it rather than silently changing
-                    # the measured configuration
-                    raise ValueError(
-                        "group_pieces requires a collectable query batch "
-                        "(scan mode); this batch exceeded the scan "
-                        "collect cap"
-                    )
                 if shard_probes is not None:
                     # auto + probes + oversized batch: the cogroup
                     # fallback cannot route — surface it rather than
@@ -521,46 +399,19 @@ class DiskANNIndex:
           just to feed the one-time Arrow collect cost the old warm a
           full extra scan of the index (r4: warm 487 s -> the collect
           itself is seconds once the join/persist work is gone).
-        - scan (or auto over the threshold): build + persist the scan
-          side — the ONE corpus shuffle that every later batch reuses.
+        - scan (or auto over the threshold): run the routing job — one
+          task per shard decodes it into the node-local mmap cache and
+          returns its routing points, so the first batch pays no decode.
         - cogroup: persist the raw tables; the per-batch cogroup
           exchange re-reads them every batch.
-        - grouped: routing pass PLUS one scan-all dummy batch through
-          the group tasks, so every member piece's mmap cache entry is
-          materialized and a ``group_pieces=True`` serving loop's first
-          batch doesn't pay the per-node parquet decode.
         """
-        if mode not in ("auto", "broadcast", "scan", "cogroup", "grouped"):
+        if mode not in ("auto", "broadcast", "scan", "cogroup"):
             # same whitelist as search_with_dists: a typo ("broadcst")
             # would otherwise fall into the cogroup else-branch and
             # silently persist GBs of raw tables for nothing (r4 ADVICE)
             raise ValueError(
-                f"mode must be auto|broadcast|scan|cogroup|grouped, "
-                f"got {mode!r}"
+                f"mode must be auto|broadcast|scan|cogroup, got {mode!r}"
             )
-        if mode == "grouped":
-            if not self._use_scan_cache():
-                raise ValueError(
-                    "warm('grouped') requires the cached scan path "
-                    "(file-backed index with RDS_SCAN_CACHE enabled)"
-                )
-            # routing pass populates every per-shard cache entry; the
-            # scan-all k=1/beam=1 dummy search then touches every group
-            # task once, decoding any members the routing pass missed
-            self._get_scan_routing()
-            m = self.meta
-            elem_sql = "bigint" if m.elem_type == "long" else "float"
-            probe = self.spark.range(1).select(
-                F.col("id").alias("query_id"),
-                F.array_repeat(F.lit(0).cast(elem_sql), m.dim).alias("qvec"),
-            )
-            search_ops.grouped_scan_search(
-                probe, self._get_groups(), self.path,
-                self._get_cache_token(), shard_cache.cache_root(),
-                self.params, k=1, beam_width=1,
-                skeleton=self._get_group_skeleton,
-            ).count()
-            return self
         m = self.meta
         use_broadcast = mode == "broadcast" or (
             mode == "auto" and self._fits_broadcast()
@@ -578,13 +429,10 @@ class DiskANNIndex:
                 beam_width=1, shards_bc=self._shards_bc,
             ).count()
         elif mode in ("auto", "scan"):
-            if self._use_scan_cache():
-                # the routing job decodes every shard through
-                # get_or_decode, so one pass populates the whole node-local
-                # cache AND yields the probe-routing points
-                self._get_scan_routing()
-            else:
-                self._get_scan_side()
+            # the routing job decodes every shard through get_or_decode,
+            # so one pass populates the whole node-local cache AND yields
+            # the probe-routing points
+            self._get_scan_routing()
         else:
             self.vectors = self.vectors.persist()
             self.graph = self.graph.persist()
@@ -594,22 +442,16 @@ class DiskANNIndex:
 
     def close(self) -> None:
         """Release every piece of cluster state this handle pinned —
-        the scan side persist, the shard broadcast, and the cogroup-warm
-        table persists. A long-lived session cycling many index handles
-        otherwise accumulates cached tables/broadcasts until executor
-        storage fills (r4 verdict lifecycle item). The handle stays
-        usable after close(): the lazy caches rebuild on next use."""
-        if self._scan_side is not None:
-            self._scan_side.unpersist()
-            self._scan_side = None
+        the skeleton persist and mmap shard cache, the shard broadcast,
+        and the cogroup-warm table persists. A long-lived session cycling
+        many index handles otherwise accumulates cached tables/broadcasts
+        until executor storage fills (r4 verdict lifecycle item). The
+        handle stays usable after close(): the lazy caches rebuild on
+        next use."""
         self._scan_routing = None
         if self._skeleton is not None:
             self._skeleton.unpersist()
             self._skeleton = None
-        self._groups = None
-        if self._group_skeleton is not None:
-            self._group_skeleton.unpersist()
-            self._group_skeleton = None
         if self._cache_token is not None:
             # executor nodes hold their own /<cache_root>/<token> trees
             # (populated by the routing warm and by self-heal decodes);

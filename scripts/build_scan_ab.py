@@ -1,7 +1,7 @@
 """Structural A/B for the r11 build lineage cut: run ONE kmeans-sharded
 build_index with event logging and report, per stage, the input records
 read (how often the corpus is scanned) plus the app job count.
-Weather-independent. Usage: python job_scan_build.py <repo_dir> <tag>"""
+Weather-independent. Usage: python scripts/build_scan_ab.py <repo_dir> <tag>"""
 import glob
 import json
 import os
@@ -55,6 +55,8 @@ spark.stop()
 cands = [p for p in glob.glob(evdir + "/**/*", recursive=True)
          if os.path.isfile(p) and not p.endswith(".crc")
          and "appstatus" not in os.path.basename(p)]
+if not cands:
+    sys.exit(f"no Spark event log was written under {evdir}")
 log = sorted(cands)[0]
 per_stage = {}
 names = {}

@@ -39,12 +39,6 @@ PROBES = PROBES if PROBES == "auto" else int(PROBES)
 # "broadcast" (query tasks, local finalize; over-budget file-backed
 # indexes ride the mmap shard map, so this is now legal at 5M)
 MODE = os.environ.get("RDS_PROBE_MODE", "scan")
-# RDS_GROUP_PIECES=1 (scan mode): serve co-probed cap-split pieces one
-# TASK per group (search_with_dists(group_pieces=True)) — the r9
-# verdict #2 per-probe-cost lever, r11 shape: per-piece kernels under
-# grouped dispatch (bit-identical to singleton; the r10 union-search
-# variant was cut after its gated recall collapse).
-GROUP_PIECES = os.environ.get("RDS_GROUP_PIECES") == "1"
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 WINDOWS = int(os.environ.get("RDS_STEADY_WINDOWS", "2"))
 GATE = float(os.environ.get("RDS_SLICE_GATE", "1.25"))
@@ -197,7 +191,7 @@ def main() -> None:
             def run_once(count_only=True):
                 res = idx.search_with_dists(
                     queries, k=K, beam_width=beam, shard_probes=PROBES,
-                    mode=MODE, group_pieces=GROUP_PIECES,
+                    mode=MODE,
                 )
                 return res.count() if count_only else res
 
@@ -245,10 +239,6 @@ def main() -> None:
             {
                 "metric": "probe5m",
                 "mode": MODE,
-                "group_pieces": GROUP_PIECES,
-                "n_groups": (
-                    len(idx._get_groups()) if GROUP_PIECES else None
-                ),
                 "index": IDX,
                 "beam_width": BEAM,
                 "shard_probes": str(PROBES),

@@ -1,7 +1,7 @@
 """r11 optimization-round profiler (guide §1: measure first).
 
-profile_r10.py plus the r10-verdict item #7 fix: a host-calibration
-probe is interleaved between every profiled query (same protocol as
+A per-query profiler with a host-calibration probe interleaved
+between every profiled query (same protocol as
 bench.py's per-query probes) and each query carries a ``valid`` flag
 that is true only when BOTH surrounding probes are two-axis quiet — so
 no per-query reading can be quoted without its weather tag, and the

@@ -41,11 +41,6 @@ BEAM = int(os.environ.get("RDS_BEAM", "128"))
 # single shard)
 PROBES = os.environ.get("RDS_STREAM_PROBES") or None
 PROBES = int(PROBES) if PROBES and PROBES != "auto" else PROBES
-# RDS_STREAM_GROUP=1: serve each micro-batch through the piece-group
-# cached scan (search_with_dists(mode='scan', group_pieces=True)) —
-# one union-sub-graph search per probed cluster instead of one search
-# per cap-split piece. Requires a file-backed multi-shard index.
-GROUP = os.environ.get("RDS_STREAM_GROUP") == "1"
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 K = 10
 WARM_BATCHES = 3  # first triggers pay worker/broadcast warm-up
@@ -158,9 +153,8 @@ def main() -> None:
     query = ann_search_stream(
         q_stream,
         lambda q: idx.search_with_dists(
-            q, k=K, beam_width=BEAM,
-            mode="scan" if GROUP else "broadcast",
-            shard_probes=PROBES, group_pieces=GROUP,
+            q, k=K, beam_width=BEAM, mode="broadcast",
+            shard_probes=PROBES,
         ),
         sink_path=sink,
         checkpoint_path=ckpt,
@@ -248,7 +242,6 @@ def main() -> None:
         "offered_qps": RATE,
         "beam_width": BEAM,
         "shard_probes": str(PROBES) if PROBES is not None else None,
-        "group_pieces": GROUP,
         "n_batches_measured": len(steady),
         "n_batches_clean": len(clean_rows),
         "achieved_qps_in_batch": round(tot_rows / tot_sec, 1) if tot_sec else None,

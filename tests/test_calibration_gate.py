@@ -12,6 +12,7 @@ from bench import (
     BW_GATE,
     CALIB_BW_ANCHOR,
     CALIB_R4,
+    attempt_key,
     bw_ratio,
     compute_ratio,
     probes_quiet,
@@ -74,3 +75,37 @@ def test_explicit_bw_gate_override():
     mild = _with(stream_copy256mb_sec=CALIB_BW_ANCHOR * 1.4)
     assert probes_quiet(mild, gate=1.25)  # default 1.5 band
     assert not probes_quiet(mild, gate=1.25, bw_gate=1.3)
+
+
+def _attempt(valid, queries_valid, value):
+    return {
+        "calibration_valid": valid,
+        "queries_valid": {f"q{i}": v for i, v in enumerate(queries_valid)},
+        "value": value,
+    }
+
+
+def _best(*attempts):
+    return max(attempts, key=attempt_key)
+
+
+def test_attempt_key_valid_beats_faster_invalid():
+    slow_valid = _attempt(True, [True, True], 40.0)
+    fast_invalid = _attempt(False, [True, True], 30.0)
+    assert _best(fast_invalid, slow_valid) is slow_valid
+    assert _best(slow_valid, fast_invalid) is slow_valid
+
+
+def test_attempt_key_all_invalid_prefers_most_valid_queries():
+    fast_few = _attempt(False, [True, False, False], 20.0)
+    slow_most = _attempt(False, [True, True, False], 50.0)
+    assert _best(fast_few, slow_most) is slow_most
+
+
+def test_attempt_key_zero_value_is_not_missing():
+    zero = _attempt(False, [True], 0.0)
+    positive = _attempt(False, [True], 5.0)
+    missing = _attempt(False, [True], None)
+    assert _best(positive, zero) is zero
+    assert _best(missing, positive) is positive
+    assert attempt_key(zero) > attempt_key(missing)

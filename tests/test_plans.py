@@ -148,12 +148,9 @@ def test_exact_knn_huge_query_side_not_broadcast(spark):
     assert plan.count("BroadcastExchange") <= 1
 
 
-def test_scan_mode_matches_broadcast_mode(spark, sf_dir, monkeypatch):
-    """Scan search (resident corpus, broadcast queries — the >memory
-    steady-state path) must return exactly the broadcast-mode rows in
-    BOTH residency flavors: the default mmap shard cache (skeleton
-    dispatch — no corpus scan in the plan) and the legacy JVM-persisted
-    side (InMemoryTableScan below the applyInPandas)."""
+def test_scan_mode_matches_broadcast_mode(spark, sf_dir):
+    """Scan search (mmap-cached corpus, broadcast queries — the >memory
+    steady-state path) must return exactly the broadcast-mode rows."""
     import tempfile, shutil, os as _os
     from rust_diskann_spark import IndexParams, build_index
 
@@ -173,11 +170,6 @@ def test_scan_mode_matches_broadcast_mode(spark, sf_dir, monkeypatch):
     rows_b = sorted(map(tuple, res_b.collect()))
     rows_s = sorted(map(tuple, res_s.collect()))
     assert rows_b == rows_s
-    monkeypatch.setenv("RDS_SCAN_CACHE", "0")
-    res_l = idx.search_with_dists(queries, k=5, beam_width=64, mode="scan")
-    assert sorted(map(tuple, res_l.collect())) == rows_b
-    plan = res_l._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan  # reads the persisted scan side
     idx.close()
     shutil.rmtree(path, ignore_errors=True)
 
@@ -272,7 +264,6 @@ def test_auto_mode_memory_aware_broadcast_gate(spark, tmp_path):
             q, k=3, beam_width=16, mode="auto").collect()))
         assert idx_scan._shards_bc is None  # never broadcast
         assert idx_scan._skeleton is not None  # cached scan path chosen
-        assert idx_scan._scan_side is None  # no JVM-persisted corpus
         idx_scan.close()
     finally:
         spark.conf.unset(plans_index.BROADCAST_THRESHOLD_CONF)
@@ -282,14 +273,13 @@ def test_auto_mode_memory_aware_broadcast_gate(spark, tmp_path):
     res_bc = sorted(map(tuple, idx_bc.search_with_dists(
         q, k=3, beam_width=16, mode="auto").collect()))
     assert idx_bc._shards_bc is not None
-    assert idx_bc._scan_side is None
     assert res_scan == res_bc
     idx_bc.close()
 
 
 def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypatch):
     """r3 ADVICE: the scan-batch cap gate is the capped collect itself —
-    evaluated once inside scan_search — and auto mode reroutes an
+    evaluated once inside cached_scan_search — and auto mode reroutes an
     oversized batch to the cogrouped search (never collects); explicit
     scan mode propagates the error."""
     import tempfile, shutil, os as _os
@@ -323,10 +313,8 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
     res = idx.search_with_dists(queries, k=3, beam_width=32, mode="auto")
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan  # routed to cogroup, not scan
-    # r4 ADVICE: the rerouted batch must NOT have paid the one-time corpus
-    # shuffle — scan-side state is built only after the batch passes the
-    # gate (the skeleton builder is likewise deferred on the cached path)
-    assert idx._scan_side is None
+    # r4 ADVICE: the rerouted batch must NOT leave scan state pinned —
+    # the skeleton is built only after the batch passes the gate
     assert idx._skeleton is None
     assert sorted(map(tuple, res.collect())) == expected
     with _pytest.raises(search_ops.ScanBatchTooLarge):
@@ -392,9 +380,8 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
 
 
 def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
-    """r4 verdict lifecycle item: close() must unpersist the scan-side
-    state (mmap shard cache + skeleton on the default path, the persisted
-    corpus side on the legacy path), destroy the shard broadcast, and
+    """r4 verdict lifecycle item: close() must release the scan-side
+    state (mmap shard cache + skeleton), destroy the shard broadcast, and
     unpersist cogroup-warm persists so a session cycling many handles
     doesn't accumulate cached tables. The handle stays usable afterwards
     (lazy caches rebuild)."""
@@ -415,17 +402,11 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
         params=IndexParams(max_degree=8, build_beam_width=16, num_shards=2,
                            seed=4),
     )
-    idx.warm("scan")  # default: mmap cache populated, skeleton pinned
+    idx.warm("scan")  # mmap cache populated, skeleton pinned
     sk_df = idx._skeleton
     token_dir = _os.path.join(shard_cache.cache_root(), idx._cache_token)
     assert sk_df is not None and sk_df.storageLevel.useMemory
     assert _os.path.isdir(token_dir)
-    assert idx._scan_side is None  # no JVM-persisted corpus on this path
-    monkeypatch.setenv("RDS_SCAN_CACHE", "0")
-    idx.warm("scan")  # legacy flavor: persisted (vectors ⋈ graph) side
-    monkeypatch.delenv("RDS_SCAN_CACHE")
-    scan_df = idx._scan_side
-    assert scan_df is not None and scan_df.storageLevel.useMemory
     idx.warm("broadcast")
     assert idx._shards_bc is not None
     idx.warm("cogroup")
@@ -433,11 +414,10 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
     assert idx.graph.storageLevel.useMemory
 
     idx.close()
-    assert idx._scan_side is None and idx._shards_bc is None
+    assert idx._shards_bc is None
     assert idx._skeleton is None and idx._cache_token is None
     assert not _os.path.exists(token_dir)
     assert not sk_df.storageLevel.useMemory
-    assert not scan_df.storageLevel.useMemory
     assert not idx.vectors.storageLevel.useMemory
     assert not idx.graph.storageLevel.useMemory
     # still usable: lazy state rebuilds on demand

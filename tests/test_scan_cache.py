@@ -1,7 +1,6 @@
 """Scan-mode mmap shard cache (operators/shard_cache.py): the cached
-path must be bit-identical to broadcast and legacy scan search, self-heal
-from the index parquet on cache loss, and release its disk footprint on
-close()."""
+path must be bit-identical to broadcast search, self-heal from the index
+parquet on cache loss, and release its disk footprint on close()."""
 
 import os
 import shutil
@@ -48,8 +47,10 @@ def idx_path(spark, tmp_path, monkeypatch):
     return path
 
 
-def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path,
-                                                  monkeypatch):
+def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path):
+    """Scan-all cached scan vs broadcast mode, bit for bit. Broadcast is
+    the reference now that the JVM-persisted scan path is gone; the name
+    is kept so the test keeps its history."""
     q = _queries(spark, _corpus(spark))
     idx = open_index(spark, idx_path)
     res_bc = _rows(idx.search_with_dists(q, k=5, beam_width=32,
@@ -57,12 +58,7 @@ def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path,
     res_cached = _rows(idx.search_with_dists(q, k=5, beam_width=32,
                                              mode="scan"))
     assert idx._skeleton is not None  # cached path was taken
-    assert idx._scan_side is None  # no JVM-persisted corpus
-    monkeypatch.setenv("RDS_SCAN_CACHE", "0")
-    res_legacy = _rows(idx.search_with_dists(q, k=5, beam_width=32,
-                                             mode="scan"))
-    assert idx._scan_side is not None  # legacy path was taken
-    assert res_cached == res_bc == res_legacy
+    assert res_cached == res_bc
     idx.close()
 
 
@@ -80,21 +76,22 @@ def test_cached_scan_plan_ships_no_corpus(spark, idx_path):
     idx.close()
 
 
-def test_cached_probed_matches_legacy_probed(spark, idx_path, monkeypatch):
+def test_cached_probed_matches_legacy_probed(spark, idx_path):
+    """Probed cached scan vs probed broadcast mode at the same
+    ``shard_probes``: both route on each shard's medoid + entry points,
+    so they must probe the same shards and agree bit for bit. Broadcast
+    is the reference now that the JVM-persisted scan path is gone; the
+    name is kept so the test keeps its history."""
     q = _queries(spark, _corpus(spark))
     idx = open_index(spark, idx_path)
     for probes in (2, "auto"):
         got_cached = _rows(idx.search_with_dists(
             q, k=5, beam_width=32, shard_probes=probes, mode="scan"
         ))
-        monkeypatch.setenv("RDS_SCAN_CACHE", "0")
-        idx_legacy = open_index(spark, idx_path)
-        got_legacy = _rows(idx_legacy.search_with_dists(
-            q, k=5, beam_width=32, shard_probes=probes, mode="scan"
+        got_bc = _rows(idx.search_with_dists(
+            q, k=5, beam_width=32, shard_probes=probes, mode="broadcast"
         ))
-        idx_legacy.close()
-        monkeypatch.delenv("RDS_SCAN_CACHE")
-        assert got_cached == got_legacy
+        assert got_cached == got_bc
     idx.close()
 
 
