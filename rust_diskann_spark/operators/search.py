@@ -469,43 +469,91 @@ def _probe_map_from_routing(
     return {int(s): np.nonzero(pmask[:, j])[0] for j, s in enumerate(sids)}
 
 
+def _shard_loads(
+    probe_map: dict[int, np.ndarray] | None, n_q: int, num_shards: int
+) -> dict[int, int]:
+    """{shard: number of queries it searches}: every shard takes the whole
+    batch under scan-all (``probe_map is None``), else its probe rows."""
+    if probe_map is None:
+        return {s: n_q for s in range(num_shards)}
+    return {int(s): len(rows) for s, rows in probe_map.items()}
+
+
+def _pack_shards(loads: dict[int, int], n_tasks: int) -> list[list[int]]:
+    """Greedy longest-processing-time (LPT) packing of shards into at most
+    ``n_tasks`` bins, one bin per Python task. Heaviest shard first (ties
+    by shard id), each into the lightest bin so far (ties by bin index),
+    so the plan is deterministic and its heaviest bin carries at most
+    mean + max(load). Shards with zero load get no bin."""
+    import heapq
+
+    items = sorted((-w, s) for s, w in loads.items() if w > 0)
+    n = min(max(n_tasks, 1), len(items))
+    bins: list[list[int]] = [[] for _ in range(n)]
+    heap = [(0, b) for b in range(n)]
+    for neg_w, s in items:
+        load, b = heapq.heappop(heap)
+        bins[b].append(s)
+        heapq.heappush(heap, (load - neg_w, b))
+    return bins
+
+
+def _map_packed(spark, n_tasks: int, run_task, schema: str) -> DataFrame:
+    """One Python task per bin: ``spark.range(0, n, 1, n)`` holds one task
+    index per partition and ``run_task(t)`` yields bin ``t``'s frames.
+    Shards are packed because every Python task pays ~0.2-0.3 CPU-s of
+    fixed set-up (``importlib.invalidate_caches()`` in PySpark 4.1's
+    ``setup_spark_files``, 4 vCPUs), however little it searches."""
+
+    def run(batches):
+        for pdf in batches:
+            for t in pdf["id"]:
+                yield from run_task(int(t))
+
+    return spark.range(0, n_tasks, 1, n_tasks).mapInPandas(run, schema)
+
+
 def cached_scan_routing(
-    skeleton: DataFrame, index_path: str, token: str, root: str, metric: str
+    spark, num_shards: int, index_path: str, token: str, root: str,
+    metric: str,
 ) -> dict[int, np.ndarray]:
-    """{shard: routing-point matrix} via one job over the shard-id
-    skeleton. Each task resolves its shard through the mmap cache
-    (populating it on first touch — this job doubles as the cache warm)
-    and emits only the medoid + FPS entry vectors; O(shards x entry_set)
-    rows reach the driver, independent of corpus size."""
+    """{shard: routing-point matrix} via one job whose shards are spread
+    over at most ``defaultParallelism`` tasks. Each task resolves its
+    shards through the mmap cache (populating it on first touch — this
+    job doubles as the cache warm) and emits only the medoid + FPS entry
+    vectors; O(shards x entry_set) rows reach the driver, independent of
+    corpus size."""
     from rust_diskann_spark.operators import shard_cache
 
     # f32 round-trips through DOUBLE exactly; hamming words must stay
     # integral (a float64 trip zeroes low bits of words >= 2^53 — r3)
     elem_sql = "BIGINT" if metric == "hamming" else "DOUBLE"
     dtype = np.int64 if metric == "hamming" else np.float32
-
-    def emit_routing(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(pdf["shard"].iloc[0])
-        tup = shard_cache.get_or_decode(root, token, sid, index_path, metric)
-        if tup is shard_cache.EMPTY:
-            return pd.DataFrame({"shard": [], "vec": []}).astype(
-                {"shard": "int32"}
-            )
-        gids, mat, graph, medoid_local, sqn, ent, quant = tup
-        ids = [int(medoid_local)]
-        if ent is not None:
-            ids.extend(int(e) for e in ent)
-        pts = np.asarray(mat[np.array(sorted(set(ids)), dtype=np.int64)])
-        return pd.DataFrame(
-            {"shard": np.full(len(pts), sid, dtype=np.int32),
-             "vec": list(pts)}
-        )
-
-    rows = (
-        skeleton.groupBy("shard")
-        .applyInPandas(emit_routing, f"shard INT, vec ARRAY<{elem_sql}>")
-        .toPandas()
+    plan = _pack_shards(
+        {s: 1 for s in range(num_shards)},
+        spark.sparkContext.defaultParallelism,
     )
+
+    def emit_routing(t: int):
+        for sid in plan[t]:
+            tup = shard_cache.get_or_decode(
+                root, token, sid, index_path, metric
+            )
+            if tup is shard_cache.EMPTY:
+                continue
+            gids, mat, graph, medoid_local, sqn, ent, quant = tup
+            ids = [int(medoid_local)]
+            if ent is not None:
+                ids.extend(int(e) for e in ent)
+            pts = np.asarray(mat[np.array(sorted(set(ids)), dtype=np.int64)])
+            yield pd.DataFrame(
+                {"shard": np.full(len(pts), sid, dtype=np.int32),
+                 "vec": list(pts)}
+            )
+
+    rows = _map_packed(
+        spark, len(plan), emit_routing, f"shard INT, vec ARRAY<{elem_sql}>"
+    ).toPandas()
     out: dict[int, np.ndarray] = {}
     for sid, grp in rows.groupby("shard"):
         out[int(sid)] = _stack_rows(grp["vec"], dtype)
@@ -514,7 +562,6 @@ def cached_scan_routing(
 
 def cached_scan_search(
     queries: DataFrame,
-    skeleton: DataFrame,
     index_path: str,
     token: str,
     root: str,
@@ -530,25 +577,27 @@ def cached_scan_search(
     The dual of :func:`broadcast_search` with the roles flipped — Spark's
     broadcast-join side choice applied to serving. Residency is the
     node-local mmap shard cache (operators/shard_cache.py); each query
-    batch is collected and broadcast (the small side), and one
-    ``applyInPandas`` task per shard beam-searches its cached shard.
+    batch is collected and broadcast (the small side) together with its
+    probe map and a task plan, and the shards the batch probes are packed
+    into at most ``min(defaultParallelism, probed shards)`` Python tasks
+    (:func:`_pack_shards`, weighted by the queries probing each shard).
+    Each task beam-searches its shards one after another from the cache —
+    the reference's one-thread-per-core batch loop (README.md:120-134).
 
-    The dispatch side is a SKELETON of shard ids — one int row per shard,
-    range-partitioned once — so per batch the only bytes that move are the
-    broadcast query batch in and the O(q·k·shards) candidate rows out:
-    corpus bytes cross the JVM->Python boundary zero times in steady
-    state (re-shipping and re-decoding every shard partition every batch
-    cost 28.5% of 5M shard-task wall in decode alone). A cache miss
-    self-heals executor-side from the index parquet via partition
-    pruning, which is also what makes this correct on a multi-node
-    cluster with per-node caches. Use the cogrouped :func:`search` only
-    for one-shot queries or query sets too large to collect.
+    Per batch the only bytes that move are the broadcast in and the
+    O(q·k·shards) candidate rows out: corpus bytes cross the JVM->Python
+    boundary zero times in steady state (re-shipping and re-decoding
+    every shard partition every batch cost 28.5% of 5M shard-task wall
+    in decode alone). A cache miss self-heals executor-side from the
+    index parquet via partition pruning, which is also what makes this
+    correct on a multi-node cluster with per-node caches. Use the
+    cogrouped :func:`search` only for one-shot queries or query sets too
+    large to collect.
 
-    ``skeleton`` may be a DataFrame or a zero-arg callable returning one,
-    resolved only after the query batch passes the collect gate, so an
-    oversized auto-mode batch reroutes to cogroup without leaving unused
-    pinned state behind (r4 ADVICE). ``routing`` likewise may be a dict
-    or a zero-arg callable (the index handle's memoized routing job)."""
+    ``routing`` may be a dict or a zero-arg callable (the index handle's
+    memoized routing job), resolved only after the query batch passes
+    the collect gate, so an oversized auto-mode batch reroutes to cogroup
+    without running it (r4 ADVICE)."""
     spark = queries.sparkSession
     # per-shard k' = k: README.md:157 only requires k' >= k, and any row
     # with global rank < k has per-shard rank < k under the same
@@ -558,50 +607,50 @@ def cached_scan_search(
     metric = params.metric
     dtype = np.int64 if metric == "hamming" else np.float32
     q_pd = _collect_query_batch(queries)
-    if callable(skeleton):
-        skeleton = skeleton()
 
     # probed routing (IVF-style, same semantics as broadcast mode): each
-    # shard task receives only the query rows that probe it — per-shard
-    # work drops from n_q to ~n_q * p / n_shards. Probing prunes WORK, not
-    # residency (the partition-pruning analog for an applyInPandas scan).
+    # shard receives only the query rows that probe it — per-shard work
+    # drops from n_q to ~n_q * p / n_shards, and unprobed shards get no
+    # task at all. Probing prunes WORK, not residency.
     probe_map: dict[int, np.ndarray] | None = None
     if shard_probes is not None and len(q_pd):
         if callable(routing):
             routing = routing()
         if routing is None:
             routing = cached_scan_routing(
-                skeleton, index_path, token, root, metric
+                spark, params.num_shards, index_path, token, root, metric
             )
         probe_map = _probe_map_from_routing(
             q_pd, routing, metric, dtype, shard_probes
         )
-    bc = spark.sparkContext.broadcast((q_pd, probe_map))
+    plan = _pack_shards(
+        _shard_loads(probe_map, len(q_pd), params.num_shards),
+        spark.sparkContext.defaultParallelism,
+    )
+    bc = spark.sparkContext.broadcast((q_pd, probe_map, plan))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_task(t: int):
         from rust_diskann_spark.operators import shard_cache
         from time import perf_counter as _pc
 
-        _t0 = _pc()
-        sid = int(pdf["shard"].iloc[0])
-        q_all, pmap = bc.value
-        q_sel = q_all
-        if pmap is not None:
-            sel = pmap.get(sid)
-            q_sel = q_all.iloc[sel if sel is not None else []]
-        if len(q_sel) == 0:
-            return _empty_result_pdf()
-        tup = shard_cache.get_or_decode(root, token, sid, index_path, metric)
-        if tup is shard_cache.EMPTY:
-            return _empty_result_pdf()
-        return _search_decoded(
-            tup, q_sel, metric, dtype, per_shard_k, beam_width, t0=_t0,
-            source="cache",
-        )
+        q_all, pmap, task_plan = bc.value
+        for sid in task_plan[t]:
+            q_sel = q_all if pmap is None else q_all.iloc[pmap[sid]]
+            # each shard's profile window starts at its own cache lookup,
+            # so a task's earlier shards never count as a later one's
+            # decode
+            _t0 = _pc()
+            tup = shard_cache.get_or_decode(
+                root, token, sid, index_path, metric
+            )
+            if tup is shard_cache.EMPTY:
+                continue
+            yield _search_decoded(
+                tup, q_sel, metric, dtype, per_shard_k, beam_width, t0=_t0,
+                source="cache",
+            )
 
-    candidates = skeleton.groupBy("shard").applyInPandas(
-        run, schema=RESULT_SCHEMA
-    )
+    candidates = _map_packed(spark, len(plan), run_task, RESULT_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("id").asc()
     )

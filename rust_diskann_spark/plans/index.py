@@ -120,10 +120,7 @@ class DiskANNIndex:
     # lazily-collected {shard: routing-point matrix} for probed scan
     # search — O(shards x entry_set) driver memory, one tiny job ever
     _scan_routing: object = None
-    # cached-scan state: the shard-id skeleton DataFrame (one int row per
-    # shard — the dispatch side once residency lives in the mmap cache)
-    # and the index's content-derived cache token
-    _skeleton: object = None
+    # the index's content-derived mmap shard cache token
     _cache_token: str | None = None
 
     def _broadcast_shards(self):
@@ -135,9 +132,9 @@ class DiskANNIndex:
                 # node rather than one unpickled copy PER WORKER (the r7
                 # 5M attempt OOM-killed the JVM at 51 GB RSS exactly this
                 # way). Populate the cache with
-                # the distributed routing job first (one shard per task)
-                # so the first query batch doesn't have 32 workers racing
-                # to decode the same shards.
+                # the distributed routing job first (each shard decoded
+                # by one task) so the first query batch doesn't have 32
+                # workers racing to decode the same shards.
                 #
                 # Feasible-but-over-auto-budget indexes take the REAL
                 # broadcast: per-worker copies are anonymous memory
@@ -163,8 +160,9 @@ class DiskANNIndex:
     def _get_scan_routing(self):
         if self._scan_routing is None:
             self._scan_routing = search_ops.cached_scan_routing(
-                self._get_skeleton(), self.path, self._get_cache_token(),
-                shard_cache.cache_root(), self.meta.metric,
+                self.spark, self.meta.num_shards, self.path,
+                self._get_cache_token(), shard_cache.cache_root(),
+                self.meta.metric,
             )
         return self._scan_routing
 
@@ -172,26 +170,6 @@ class DiskANNIndex:
         if self._cache_token is None:
             self._cache_token = shard_cache.index_token(self.path)
         return self._cache_token
-
-    def _get_skeleton(self):
-        """Tiny persisted (shard) frame, RANGE-partitioned into one
-        partition per shard id. RangePartitioning satisfies the
-        ClusteredDistribution the cached scan's groupBy requires, so no
-        exchange is added — and unlike ``repartition(n, "shard")`` (hash,
-        which collides n distinct ints into <n buckets so some tasks
-        serve 2 shards and some none — r8 verdict nit #3) the layout
-        really is one task per shard."""
-        if self._skeleton is None:
-            n = max(self.meta.num_shards, 1)
-            sk = (
-                self.spark.range(n)
-                .select(F.col("id").cast("int").alias("shard"))
-                .repartitionByRange(n, "shard")
-                .persist()
-            )
-            sk.count()
-            self._skeleton = sk
-        return self._skeleton
 
     def _fits_broadcast(self) -> bool:
         """Auto-mode gate: footprint estimate vs the memory-aware byte
@@ -260,11 +238,12 @@ class DiskANNIndex:
         geometry (every shard within a margin of the best — covers all
         cap-split pieces of the query's home cluster without the caller
         knowing the piece count; operators/search.py _probe_mask). In
-        scan mode each resident shard task receives only the query rows
-        that probe it — per-shard work drops to ~n_q * p / n_shards while
-        the corpus partitions stay put (the partition-pruning analog for
-        an applyInPandas scan). Cogroup cannot route (it replicates every
-        query inside the exchange) and raises.
+        scan mode each shard search receives only the query rows that
+        probe it — per-shard work drops to ~n_q * p / n_shards, and a
+        shard no query probes is not searched, while the cached shards
+        stay put (the partition-pruning analog for a scan). Cogroup
+        cannot route (it replicates every query inside the exchange) and
+        raises.
 
         ``mode``: "auto" picks by the footprint estimate below;
         "broadcast"/"scan"/"cogroup" force a strategy — the same escape
@@ -286,9 +265,10 @@ class DiskANNIndex:
         - **scan mode** otherwise (the 100 TB steady-state path): each
           shard lives in the node-local mmap shard cache, decoded once per
           node from the index parquet; each query batch is collected +
-          broadcast (the small side) and one task per shard-id skeleton
-          row searches the cached shard. Per batch, only the top-k merge
-          shuffles (O(q*k'*shards) rows) — corpus bytes never move.
+          broadcast (the small side) and the shards it probes are packed
+          into at most one Python task per core, each searching its
+          shards from the cache. Per batch, only the top-k merge shuffles
+          (O(q*k'*shards) rows) — corpus bytes never move.
         - **cogrouped mode** (explicit only): corpus and queries cogroup-
           exchange per batch. Right only for one-shot searches or query
           sets too large to collect; ``query_blocks=None`` sizes task
@@ -331,15 +311,14 @@ class DiskANNIndex:
             # cogrouped search (which never collects) instead of OOMing the
             # driver; explicit scan mode propagates the error.
             try:
-                # residency is the node-local mmap shard cache; the
-                # dispatch side is the shard-id skeleton, so no corpus
-                # bytes ever shuffle or persist in the JVM
-                # (operators/shard_cache.py). Pass the skeleton BUILDER:
+                # residency is the node-local mmap shard cache, so no
+                # corpus bytes ever shuffle or persist in the JVM
+                # (operators/shard_cache.py). Pass the routing BUILDER:
                 # the batch is gated first, so an oversized batch falls
-                # through to cogroup without leaving an unused persist
-                # behind (r4 ADVICE)
+                # through to cogroup without running the routing job
+                # (r4 ADVICE)
                 return search_ops.cached_scan_search(
-                    queries, self._get_skeleton, self.path,
+                    queries, self.path,
                     self._get_cache_token(), shard_cache.cache_root(),
                     self.params, k, beam_width,
                     shard_probes=shard_probes,
@@ -399,9 +378,10 @@ class DiskANNIndex:
           just to feed the one-time Arrow collect cost the old warm a
           full extra scan of the index (r4: warm 487 s -> the collect
           itself is seconds once the join/persist work is gone).
-        - scan (or auto over the threshold): run the routing job — one
-          task per shard decodes it into the node-local mmap cache and
-          returns its routing points, so the first batch pays no decode.
+        - scan (or auto over the threshold): run the routing job — the
+          shards spread over at most one task per core, each task decodes
+          its shards into the node-local mmap cache and returns their
+          routing points, so the first batch pays no decode.
         - cogroup: persist the raw tables; the per-batch cogroup
           exchange re-reads them every batch.
         """
@@ -442,16 +422,13 @@ class DiskANNIndex:
 
     def close(self) -> None:
         """Release every piece of cluster state this handle pinned —
-        the skeleton persist and mmap shard cache, the shard broadcast,
+        the mmap shard cache and routing points, the shard broadcast,
         and the cogroup-warm table persists. A long-lived session cycling
         many index handles otherwise accumulates cached tables/broadcasts
         until executor storage fills (r4 verdict lifecycle item). The
         handle stays usable after close(): the lazy caches rebuild on
         next use."""
         self._scan_routing = None
-        if self._skeleton is not None:
-            self._skeleton.unpersist()
-            self._skeleton = None
         if self._cache_token is not None:
             # executor nodes hold their own /<cache_root>/<token> trees
             # (populated by the routing warm and by self-heal decodes);

@@ -25,5 +25,5 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
         idx.warm("grouped")
     with pytest.raises(ValueError, match="auto|broadcast|scan|cogroup"):
         idx.warm("groupd")
-    assert idx._shards_bc is None and idx._skeleton is None
+    assert idx._shards_bc is None and idx._scan_routing is None
     idx.close()

@@ -263,7 +263,7 @@ def test_auto_mode_memory_aware_broadcast_gate(spark, tmp_path):
         res_scan = sorted(map(tuple, idx_scan.search_with_dists(
             q, k=3, beam_width=16, mode="auto").collect()))
         assert idx_scan._shards_bc is None  # never broadcast
-        assert idx_scan._skeleton is not None  # cached scan path chosen
+        assert idx_scan._cache_token is not None  # cached scan path chosen
         idx_scan.close()
     finally:
         spark.conf.unset(plans_index.BROADCAST_THRESHOLD_CONF)
@@ -288,6 +288,7 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
 
     from rust_diskann_spark import IndexParams, build_index
     from rust_diskann_spark.operators import search as search_ops
+    from rust_diskann_spark.operators import shard_cache
     from rust_diskann_spark.plans import index as plans_index
 
     emb = spark.read.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
@@ -314,8 +315,10 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan  # routed to cogroup, not scan
     # r4 ADVICE: the rerouted batch must NOT leave scan state pinned —
-    # the skeleton is built only after the batch passes the gate
-    assert idx._skeleton is None
+    # no routing job ran and no shard was decoded into the mmap cache
+    assert idx._scan_routing is None
+    assert not _os.path.exists(_os.path.join(
+        shard_cache.cache_root(), idx._get_cache_token()))
     assert sorted(map(tuple, res.collect())) == expected
     with _pytest.raises(search_ops.ScanBatchTooLarge):
         idx.search_with_dists(queries, k=3, beam_width=32, mode="scan")
@@ -381,9 +384,9 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
 
 def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
     """r4 verdict lifecycle item: close() must release the scan-side
-    state (mmap shard cache + skeleton), destroy the shard broadcast, and
-    unpersist cogroup-warm persists so a session cycling many handles
-    doesn't accumulate cached tables. The handle stays usable afterwards
+    state (mmap shard cache + routing points), destroy the shard
+    broadcast, and unpersist cogroup-warm persists so a session cycling
+    many handles doesn't accumulate cached tables. The handle stays usable afterwards
     (lazy caches rebuild)."""
     import os as _os
 
@@ -402,10 +405,8 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
         params=IndexParams(max_degree=8, build_beam_width=16, num_shards=2,
                            seed=4),
     )
-    idx.warm("scan")  # mmap cache populated, skeleton pinned
-    sk_df = idx._skeleton
+    idx.warm("scan")  # mmap cache populated, routing points collected
     token_dir = _os.path.join(shard_cache.cache_root(), idx._cache_token)
-    assert sk_df is not None and sk_df.storageLevel.useMemory
     assert _os.path.isdir(token_dir)
     idx.warm("broadcast")
     assert idx._shards_bc is not None
@@ -415,9 +416,8 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
 
     idx.close()
     assert idx._shards_bc is None
-    assert idx._skeleton is None and idx._cache_token is None
+    assert idx._scan_routing is None and idx._cache_token is None
     assert not _os.path.exists(token_dir)
-    assert not sk_df.storageLevel.useMemory
     assert not idx.vectors.storageLevel.useMemory
     assert not idx.graph.storageLevel.useMemory
     # still usable: lazy state rebuilds on demand

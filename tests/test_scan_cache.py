@@ -5,6 +5,7 @@ parquet on cache loss, and release its disk footprint on close()."""
 import os
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,14 +58,18 @@ def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path):
                                          mode="broadcast"))
     res_cached = _rows(idx.search_with_dists(q, k=5, beam_width=32,
                                              mode="scan"))
-    assert idx._skeleton is not None  # cached path was taken
+    # cached path was taken: the scan populated this index's mmap cache
+    assert idx._cache_token is not None
+    assert os.path.isdir(
+        os.path.join(shard_cache.cache_root(), idx._cache_token)
+    )
     assert res_cached == res_bc
     idx.close()
 
 
 def test_cached_scan_plan_ships_no_corpus(spark, idx_path):
-    """The cached plan's corpus side is the shard-id skeleton: the index
-    parquet must not appear in the scan-mode physical plan (workers read
+    """The cached plan's dispatch side is a tiny range of task ids: the
+    index parquet must not appear in the scan-mode physical plan (workers read
     it directly, outside Spark's scan operators)."""
     q = _queries(spark, _corpus(spark))
     idx = open_index(spark, idx_path)
@@ -197,8 +202,6 @@ def test_cold_get_or_decode_returns_mmap(spark, idx_path):
     not the in-memory decode: load_shard_map memoizes whatever this
     returns, and an in-memory copy would be pinned per worker process —
     the multiplier the cache exists to remove (r8 ADVICE, medium)."""
-    import numpy as np
-
     idx = open_index(spark, idx_path)
     token = idx._get_cache_token()
     root = shard_cache.cache_root()
@@ -267,4 +270,99 @@ def test_cached_scan_hamming_roundtrip(spark, tmp_path, monkeypatch):
         q, k=3, beam_width=16, shard_probes=2, mode="scan"
     ))
     assert res_probed == res_scan  # p == num_shards -> scan-all
+    idx.close()
+
+
+def test_pack_shards_lpt_plan():
+    """The scan-mode task plan: a deterministic LPT packing of the probed
+    shards into at most one bin per task."""
+    from rust_diskann_spark.operators.search import _pack_shards, _shard_loads
+
+    loads = {0: 7, 1: 3, 2: 0, 3: 9, 4: 1, 5: 3, 6: 5, 7: 0, 8: 2}
+    probed = {s for s, w in loads.items() if w > 0}
+    for n_tasks in (1, 2, 3, 4, 7, 8, 50):
+        plan = _pack_shards(loads, n_tasks)
+        flat = [s for b in plan for s in b]
+        # every probed shard exactly once, unprobed shards nowhere
+        assert sorted(flat) == sorted(probed)
+        assert len(plan) == min(n_tasks, len(probed))
+        assert all(plan)
+        assert _pack_shards(dict(reversed(list(loads.items()))),
+                            n_tasks) == plan
+        # Graham's LPT bound: heaviest bin <= mean + largest item
+        bin_loads = [sum(loads[s] for s in b) for b in plan]
+        total = sum(loads.values())
+        assert max(bin_loads) <= total / len(plan) + max(loads.values())
+
+    # a zero-query batch runs zero tasks, probed or scan-all
+    assert _pack_shards(_shard_loads(None, 0, 8), 4) == []
+    assert _pack_shards({}, 4) == []
+    # scan-all covers every shard with the whole batch
+    plan = _pack_shards(_shard_loads(None, 20, 8), 4)
+    assert sorted(s for b in plan for s in b) == list(range(8))
+    assert [len(b) for b in plan] == [2, 2, 2, 2]
+    # probe rows: a shard nobody probes gets no task
+    pmap = {0: np.array([0, 3]), 1: np.array([], dtype=np.int64),
+            2: np.array([1])}
+    assert _shard_loads(pmap, 4, 3) == {0: 2, 1: 0, 2: 1}
+    assert _pack_shards(_shard_loads(pmap, 4, 3), 4) == [[0], [2]]
+
+
+def test_scan_dispatch_width_is_min_cores_probed_shards(spark, tmp_path,
+                                                       monkeypatch):
+    """With more shards than cores, a scan-mode batch runs its shard
+    searches in min(defaultParallelism, shards searched) Python tasks —
+    not one task per shard — and still matches broadcast mode bit for
+    bit."""
+    from rust_diskann_spark.operators import search as search_ops
+
+    monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
+    path = str(tmp_path / "idx8")
+    base = _corpus(spark, n=480)
+    build_index(
+        base, path,
+        IndexParams(max_degree=8, build_beam_width=16, num_shards=8,
+                    seed=13, shard_by="kmeans"),
+    )
+    q = _queries(spark, base, every=24)
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    idx = open_index(spark, path)
+    assert idx.meta.num_shards > cores
+    routing = idx._get_scan_routing()
+    q_pd = q.toPandas()
+    pmap = search_ops._probe_map_from_routing(
+        q_pd, routing, "l2", np.float32, 2
+    )
+    probed = sum(1 for rows in pmap.values() if len(rows))
+
+    tracker = sc.statusTracker()
+    for n, (probes, searched) in enumerate(
+        ((None, idx.meta.num_shards), (2, probed))
+    ):
+        # the query collect and probe routing run while the plan is built;
+        # only the dispatch + merge run inside the job group
+        res = idx.search_with_dists(q, k=5, beam_width=32,
+                                    shard_probes=probes, mode="scan")
+        group = f"scan-dispatch-{n}"
+        sc.setJobGroup(group, "scan dispatch width")
+        try:
+            got = _rows(res)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stages = [
+            tracker.getStageInfo(sid)
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+        ]
+        # the mapInPandas stage feeds every other stage of the merge, so
+        # it is the first one that ran (skipped stages complete no task)
+        dispatch = min((s for s in stages if s.numCompletedTasks),
+                       key=lambda s: s.stageId)
+        assert dispatch.numTasks == min(cores, searched), (
+            probes, searched, dispatch)
+        want = _rows(idx.search_with_dists(
+            q, k=5, beam_width=32, shard_probes=probes, mode="broadcast"
+        ))
+        assert got == want
     idx.close()
