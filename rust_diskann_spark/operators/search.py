@@ -1,29 +1,29 @@
 """Distributed ANN search (reference A7/A8/A10 + S1-S4).
 
-Dataflow (one shuffle end-to-end):
+Two physical strategies, one per residency model — the broadcast-join
+vs shuffle-join choice applied to serving:
 
-1. queries x shards: the query table (small side) is **replicated** to
-   every shard via a broadcast cross-join against the distinct shard ids —
-   the reference's batch-parallel rayon loop (README.md:120-134) becomes
-   task-per-(shard) parallelism;
-2. ``cogroup(...).applyInPandas``: for each shard, one task receives (that
-   shard's vectors+graph) and (all queries); it materializes the shard as
-   numpy and runs the sequential beam search (core/vamana.py) per query,
-   emitting that shard's top-k' candidates. No driver collect, no state
-   outside the task;
-3. global merge: ``Window.partitionBy(query_id).orderBy(dist, id)`` rank
-   <= k (reference S4/A11 merge; README.md:157's k'>=k equivalence). The
-   only shuffle is this merge, and it carries O(q * k * num_shards) rows —
-   independent of corpus size.
+1. :func:`broadcast_search` (index in executor memory): the whole index
+   is a broadcast variable (or its node-local mmap stand-in) and queries
+   run through one narrow ``mapInPandas``; each Arrow batch beam-searches
+   every shard it probes and finalizes its own global top-k. No shuffle.
+2. :func:`cached_scan_search` (index larger than broadcast memory): each
+   shard stays in the node-local mmap cache (operators/shard_cache.py)
+   and the query batch moves instead — collected to the driver in chunks
+   of at most ``SCAN_QUERY_COLLECT_CAP`` rows, each chunk broadcast with
+   its probe map and a packed task plan (at most one Python task per
+   core). The chunks' per-shard candidates meet in one global merge,
+   ``Window.partitionBy(query_id).orderBy(dist, id)`` rank <= k
+   (reference S4/A11; README.md:157's k' >= k equivalence), whose shuffle
+   carries O(q * k * shards) rows, independent of corpus size.
 
-Skew note (reference examples/diskann_skewed.rs exists to test this): beam
-cost varies per query, but each task handles *all* queries for *one*
-shard, so per-task cost is the sum over queries — uniform across shards by
-construction. With very large query batches, split the query side into
-blocks (``query_block`` column) for finer tasks; `search()` exposes this.
+Both are the reference's batch-parallel loop over a resident index
+(README.md:120-134); they differ only in where the index lives.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -36,21 +36,11 @@ from rust_diskann_spark.params import IndexParams
 RESULT_SCHEMA = "query_id BIGINT, id BIGINT, dist DOUBLE"
 
 # cached_scan_search collects the query batch to the driver before
-# broadcasting it (the corpus side stays resident); cap the collected rows
-# so a huge batch fails loudly instead of OOMing the driver — route those
-# through the cogrouped search, which never collects (r2 ADVICE medium
-# item).
+# broadcasting it (the corpus side stays resident). The Python driver
+# holds at most this many query rows at a time: a larger batch streams
+# through the driver once and is searched chunk by chunk (_query_chunks),
+# each chunk pickled to its own broadcast file.
 SCAN_QUERY_COLLECT_CAP = 1_000_000
-
-
-class ScanBatchTooLarge(ValueError):
-    """Raised by :func:`cached_scan_search` when the query batch exceeds
-    ``SCAN_QUERY_COLLECT_CAP``. The collect itself is the gate (a
-    ``limit(cap+1)`` collect, evaluated exactly once) — auto mode catches
-    this and reroutes to the cogrouped search, which never collects; a
-    separate pre-count would evaluate the query lineage twice and, for
-    non-deterministic sources, could disagree with the batch actually
-    collected (r3 ADVICE)."""
 
 # int8 traversal (core.vamana.QuantizedCorpus) kicks in for l2 shards at
 # least this large: below it the shard is cache-resident anyway and the
@@ -93,7 +83,9 @@ def _auto_probe_tau() -> float:
 
 # RDS_PROFILE_DIR: when set, every broadcast_search worker appends one
 # JSON line per Arrow batch to <dir>/search_profile_<pid>.jsonl with a
-# per-component time budget (stack/route/kernel/flat/merge/df + wall).
+# per-component time budget (stack/route/kernel/flat/merge/df + wall),
+# and every scan task one "shard_task" line per shard it searched
+# (decode/kernel/emit + wall).
 # The r7 verdict's measured ~2x full-path-vs-kernel gap at beam 512 is
 # Spark-mechanics overhead; this is the stopwatch that attributes it.
 # Timer reads always run (ns-scale next to ms-scale batches); file IO
@@ -249,12 +241,6 @@ def _results_flat(results, gids: np.ndarray):
     return lens, gids[flat_ids], flat_d
 
 
-def _empty_result_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"query_id": [], "id": [], "dist": []}).astype(
-        {"query_id": "int64", "id": "int64", "dist": "float64"}
-    )
-
-
 def _search_decoded(
     tup,
     q_pdf: pd.DataFrame,
@@ -262,12 +248,13 @@ def _search_decoded(
     dtype,
     per_shard_k: int,
     beam_width: int,
-    t0: float | None = None,
-    source: str = "arrow",
+    t0: float,
 ) -> pd.DataFrame:
-    """Kernel + emit over an already-decoded shard tuple — shared by the
-    Arrow-decode path (:func:`_shard_search_pdf`) and the mmap cache path
-    (:func:`cached_scan_search`)."""
+    """Kernel + emit for one shard of a scan task (:func:`_scan_task`)
+    over its already-decoded cache tuple. ``t0`` is when the task started
+    this shard's cache lookup, so the profile record's ``decode`` is that
+    lookup (a hit's mmap load or a miss's parquet decode) plus the query
+    stack."""
     from time import perf_counter as _pc
 
     gids, mat, graph, medoid_local, sqn, ent, quant = tup
@@ -289,165 +276,57 @@ def _search_decoded(
     )
     out = pd.DataFrame({"query_id": out_q, "id": out_i, "dist": out_d})
     if _PROFILE_DIR:
-        _t0 = t0 if t0 is not None else _t_decode
         _profile_emit(
             {
                 "path": "shard_task",
-                "source": source,
-                "t0": _t0,
+                "source": "cache",
+                "t0": t0,
                 "n_rows": int(len(gids)),
                 "n_q": int(len(q_pdf)),
-                "decode": round(_t_decode - _t0, 6),
+                "decode": round(_t_decode - t0, 6),
                 "kernel": round(_t_kernel - _t_decode, 6),
                 "emit": round(_pc() - _t_kernel, 6),
-                "wall": round(_pc() - _t0, 6),
+                "wall": round(_pc() - t0, 6),
             }
         )
     return out
 
 
-def _shard_search_pdf(
-    index_pdf: pd.DataFrame,
-    q_pdf: pd.DataFrame,
-    metric: str,
-    dtype,
-    per_shard_k: int,
-    beam_width: int,
-    has_entries: bool,
-) -> pd.DataFrame:
-    """One shard's beam search over one query batch (the executor-side
-    kernel of the cogrouped search): materialize the shard as numpy from
-    its Arrow rows, run the lockstep batch kernel, map local ordinals back
-    to global ids."""
-    from time import perf_counter as _pc
+def _query_chunks(queries: DataFrame):
+    """Yield a scan-mode query batch as ``(query_id, qvec)`` pandas
+    chunks of at most ``SCAN_QUERY_COLLECT_CAP`` rows.
 
-    if len(index_pdf) == 0 or len(q_pdf) == 0:
-        return _empty_result_pdf()
-    _t0 = _pc()
-    ids = index_pdf["id"].to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ids, kind="stable")
-    gids = ids[order]
-    mat = _stack_rows(index_pdf["vec"], dtype)[order]
-    nbrs = index_pdf["neighbors"].to_numpy()
-    lens = np.fromiter((len(x) for x in nbrs), np.int64, count=len(nbrs))
-    flat_nb = (
-        np.concatenate(nbrs).astype(np.int64, copy=False)
-        if lens.sum()
-        else np.empty(0, np.int64)
-    )
-    graph = _adjacency_from_flat(gids, flat_nb, lens, order)
-    medoid_local = int(
-        _locate_ids(gids, [int(index_pdf["medoid"].iloc[0])], "medoid")[0]
-    )
-    ent = None
-    if has_entries:
-        ent = _locate_ids(
-            gids, np.asarray(index_pdf["entries"].iloc[0], dtype=np.int64),
-            "entry",
-        ).astype(np.int64)
-    sqn = vamana.sq_norms(mat) if metric in ("l2", "cosine") else None
-    quant = _maybe_quant(metric, mat)
-    return _search_decoded(
-        (gids, mat, graph, medoid_local, sqn, ent, quant),
-        q_pdf, metric, dtype, per_shard_k, beam_width, t0=_t0,
-    )
-
-
-def search(
-    queries: DataFrame,
-    index_vectors: DataFrame,
-    index_graph: DataFrame,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    query_blocks: int = 1,
-) -> DataFrame:
-    """Top-k ANN -> (query_id, rank, id, dist), rank 1..k by (dist, id).
-
-    ``queries``: (query_id BIGINT, qvec ARRAY<scalar>).
-    ``index_vectors``: (shard, id, vec); ``index_graph``: (shard, id,
-    neighbors, medoid) — as produced by operators.build / sources.index_store.
-    """
-    # k' = k: see cached_scan_search — README.md:157 needs only k' >= k,
-    # and per-shard rows past rank k can never survive the global rank
-    # filter
-    per_shard_k = k
-
-    # shards are 0..num_shards-1 by construction (build.assign_shards) —
-    # synthesize the replication list instead of re-scanning the index
-    # (avoids a self-join and an extra scan)
-    shards = queries.sparkSession.range(params.num_shards).select(
-        F.col("id").cast("int").alias("shard")
-    )
-    q_rep = queries.select(
+    A batch under the cap is one ``limit(cap+1)`` Arrow collect, yielded
+    as a single chunk: its lineage runs exactly once. A larger batch
+    drops that result and streams the whole batch through the driver
+    once with ``toLocalIterator()``, cut into cap-sized chunks. Only rows
+    from that one pass are searched, so a non-deterministic source can
+    never hand the search two different batches. An empty
+    batch yields one empty chunk."""
+    q = queries.select(
         F.col("query_id").cast("long").alias("query_id"), F.col("qvec")
-    ).crossJoin(F.broadcast(shards))
-
-    graph_cols = ["shard", "id", "neighbors", "medoid"]
-    has_entries = "entries" in index_graph.columns  # pre-r1 indexes lack it
-    if has_entries:
-        graph_cols.append("entries")
-    side = index_vectors.join(index_graph.select(*graph_cols), ["shard", "id"])
-
-    group_keys = ["shard"]
-    if query_blocks > 1:
-        # finer task granularity for huge query batches: replicate each
-        # shard's data across `query_blocks` tasks, split queries by block
-        blocks = queries.sparkSession.range(query_blocks).select(
-            F.col("id").cast("int").alias("qblock")
-        )
-        q_rep = q_rep.withColumn(
-            "qblock", (F.col("query_id") % F.lit(query_blocks)).cast("int")
-        )
-        side = side.crossJoin(F.broadcast(blocks))
-        group_keys = ["shard", "qblock"]
-
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-
-    def search_shard(index_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _shard_search_pdf(
-            index_pdf, q_pdf, metric, dtype, per_shard_k, beam_width, has_entries
-        )
-
-    candidates = (
-        side.groupBy(*group_keys)
-        .cogroup(q_rep.groupBy(*group_keys))
-        .applyInPandas(search_shard, schema=RESULT_SCHEMA)
     )
+    cap = SCAN_QUERY_COLLECT_CAP
+    q_pd = q.limit(cap + 1).toPandas()
+    if len(q_pd) <= cap:
+        yield q_pd
+        return
+    del q_pd
 
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "dist")
-    )
+    def chunk(rows):
+        return pd.DataFrame({
+            "query_id": np.array([r[0] for r in rows], dtype=np.int64),
+            "qvec": [np.asarray(r[1]) for r in rows],
+        })
 
-
-def search_ids(*args, **kwargs) -> DataFrame:
-    """Ids-only projection (reference A8 ``search``, lib.rs:696-701).
-    Catalyst prunes the dist column out of the merge."""
-    return search(*args, **kwargs).select("query_id", "rank", "id")
-
-
-def _collect_query_batch(queries: DataFrame) -> pd.DataFrame:
-    """Capped driver-side collect of a scan-mode query batch. The collect
-    itself is the gate — ``limit(cap+1)``, evaluated exactly once (r3
-    ADVICE: a separate pre-count double-evaluates the lineage)."""
-    q_pd = (
-        queries.select(
-            F.col("query_id").cast("long").alias("query_id"), F.col("qvec")
-        )
-        .limit(SCAN_QUERY_COLLECT_CAP + 1)
-        .toPandas()
-    )
-    if len(q_pd) > SCAN_QUERY_COLLECT_CAP:
-        raise ScanBatchTooLarge(
-            f"scan-mode query batch exceeds the collect cap "
-            f"{SCAN_QUERY_COLLECT_CAP}: batches this large should use the "
-            "cogrouped search (mode='cogroup'), which never collects"
-        )
-    return q_pd
+    rows = []
+    for row in q.toLocalIterator():
+        rows.append(row)
+        if len(rows) == cap:
+            yield chunk(rows)
+            rows = []
+    if rows:
+        yield chunk(rows)
 
 
 def _probe_map_from_routing(
@@ -560,74 +439,12 @@ def cached_scan_routing(
     return out
 
 
-def cached_scan_search(
-    queries: DataFrame,
-    index_path: str,
-    token: str,
-    root: str,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    routing=None,
-) -> DataFrame:
-    """Steady-state search for indexes LARGER than executor broadcast
-    memory: the corpus stays put, the query batch moves.
-
-    The dual of :func:`broadcast_search` with the roles flipped — Spark's
-    broadcast-join side choice applied to serving. Residency is the
-    node-local mmap shard cache (operators/shard_cache.py); each query
-    batch is collected and broadcast (the small side) together with its
-    probe map and a task plan, and the shards the batch probes are packed
-    into at most ``min(defaultParallelism, probed shards)`` Python tasks
-    (:func:`_pack_shards`, weighted by the queries probing each shard).
-    Each task beam-searches its shards one after another from the cache —
-    the reference's one-thread-per-core batch loop (README.md:120-134).
-
-    Per batch the only bytes that move are the broadcast in and the
-    O(q·k·shards) candidate rows out: corpus bytes cross the JVM->Python
-    boundary zero times in steady state (re-shipping and re-decoding
-    every shard partition every batch cost 28.5% of 5M shard-task wall
-    in decode alone). A cache miss self-heals executor-side from the
-    index parquet via partition pruning, which is also what makes this
-    correct on a multi-node cluster with per-node caches. Use the
-    cogrouped :func:`search` only for one-shot queries or query sets too
-    large to collect.
-
-    ``routing`` may be a dict or a zero-arg callable (the index handle's
-    memoized routing job), resolved only after the query batch passes
-    the collect gate, so an oversized auto-mode batch reroutes to cogroup
-    without running it (r4 ADVICE)."""
-    spark = queries.sparkSession
-    # per-shard k' = k: README.md:157 only requires k' >= k, and any row
-    # with global rank < k has per-shard rank < k under the same
-    # (dist, id) order — beam-sized k' inflated the merge shuffle by
-    # beam/k (51x at k=10 / beam 512) for rows the rank filter drops
-    per_shard_k = k
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    q_pd = _collect_query_batch(queries)
-
-    # probed routing (IVF-style, same semantics as broadcast mode): each
-    # shard receives only the query rows that probe it — per-shard work
-    # drops from n_q to ~n_q * p / n_shards, and unprobed shards get no
-    # task at all. Probing prunes WORK, not residency.
-    probe_map: dict[int, np.ndarray] | None = None
-    if shard_probes is not None and len(q_pd):
-        if callable(routing):
-            routing = routing()
-        if routing is None:
-            routing = cached_scan_routing(
-                spark, params.num_shards, index_path, token, root, metric
-            )
-        probe_map = _probe_map_from_routing(
-            q_pd, routing, metric, dtype, shard_probes
-        )
-    plan = _pack_shards(
-        _shard_loads(probe_map, len(q_pd), params.num_shards),
-        spark.sparkContext.defaultParallelism,
-    )
-    bc = spark.sparkContext.broadcast((q_pd, probe_map, plan))
+def _scan_task(bc, root: str, token: str, index_path: str, metric: str,
+               dtype, k: int, beam_width: int):
+    """Body of one scan-mode Python task for one query chunk: ``bc``
+    holds the chunk's ``(queries, probe map, task plan)`` and
+    ``run_task(t)`` beam-searches bin ``t``'s shards one after another
+    from the node-local mmap cache."""
 
     def run_task(t: int):
         from rust_diskann_spark.operators import shard_cache
@@ -646,11 +463,88 @@ def cached_scan_search(
             if tup is shard_cache.EMPTY:
                 continue
             yield _search_decoded(
-                tup, q_sel, metric, dtype, per_shard_k, beam_width, t0=_t0,
-                source="cache",
+                tup, q_sel, metric, dtype, k, beam_width, _t0
             )
 
-    candidates = _map_packed(spark, len(plan), run_task, RESULT_SCHEMA)
+    return run_task
+
+
+def cached_scan_search(
+    queries: DataFrame,
+    index_path: str,
+    token: str,
+    root: str,
+    params: IndexParams,
+    k: int,
+    beam_width: int = 64,
+    shard_probes: int | str | None = None,
+    routing=None,
+) -> DataFrame:
+    """Search for indexes LARGER than executor broadcast memory: the
+    corpus stays put, the query batch moves.
+
+    The dual of :func:`broadcast_search` with the roles flipped — Spark's
+    broadcast-join side choice applied to serving. Residency is the
+    node-local mmap shard cache (operators/shard_cache.py). The query
+    batch is collected in chunks of at most ``SCAN_QUERY_COLLECT_CAP``
+    rows (:func:`_query_chunks`; a batch under the cap is one collect).
+    Each chunk is broadcast (the small side) together with its probe map
+    and a task plan, and the shards it probes are packed into at most
+    ``min(defaultParallelism, probed shards)`` Python tasks
+    (:func:`_pack_shards`, weighted by the queries probing each shard).
+    Each task beam-searches its shards one after another from the cache —
+    the reference's one-thread-per-core batch loop (README.md:120-134).
+    All chunks' candidates meet in one window top-k merge.
+
+    Per batch the only bytes that move are the broadcasts in and the
+    O(q·k·shards) candidate rows out: corpus bytes cross the JVM->Python
+    boundary zero times in steady state (re-shipping and re-decoding
+    every shard partition every batch cost 28.5% of 5M shard-task wall
+    in decode alone). A cache miss self-heals executor-side from the
+    index parquet via partition pruning, which is also what makes this
+    correct on a multi-node cluster with per-node caches.
+
+    ``routing`` may be a dict or a zero-arg callable (the index handle's
+    memoized routing job). It is resolved once, at the first non-empty
+    chunk, so an empty batch never runs the routing job."""
+    spark = queries.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    metric = params.metric
+    dtype = np.int64 if metric == "hamming" else np.float32
+    parts = []
+    for q_pd in _query_chunks(queries):
+        # probed routing (IVF-style, same semantics as broadcast mode):
+        # each shard receives only the query rows that probe it —
+        # per-shard work drops from n_q to ~n_q * p / n_shards, and
+        # unprobed shards get no task at all. Probing prunes WORK, not
+        # residency.
+        probe_map: dict[int, np.ndarray] | None = None
+        if shard_probes is not None and len(q_pd):
+            if callable(routing):
+                routing = routing()
+            if routing is None:
+                routing = cached_scan_routing(
+                    spark, params.num_shards, index_path, token, root,
+                    metric,
+                )
+            probe_map = _probe_map_from_routing(
+                q_pd, routing, metric, dtype, shard_probes
+            )
+        plan = _pack_shards(
+            _shard_loads(probe_map, len(q_pd), params.num_shards), par
+        )
+        bc = spark.sparkContext.broadcast((q_pd, probe_map, plan))
+        # per-shard k' = k: README.md:157 only requires k' >= k, and any
+        # row with global rank < k has per-shard rank < k under the same
+        # (dist, id) order — beam-sized k' inflated the merge shuffle by
+        # beam/k (51x at k=10 / beam 512) for rows the rank filter drops
+        parts.append(_map_packed(
+            spark, len(plan),
+            _scan_task(bc, root, token, index_path, metric, dtype, k,
+                       beam_width),
+            RESULT_SCHEMA,
+        ))
+    candidates = reduce(DataFrame.union, parts)
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("id").asc()
     )
@@ -788,7 +682,7 @@ def _decode_shard(vtbl, gtbl, s: int, metric: str, dtype, has_entries: bool):
             np.asarray(gtbl.column("entries")[0].as_py(), dtype=np.int64),
             "entry",
         ).astype(np.int64)
-    # l2 AND cosine: _shard_search_pdf / beam_search_batch consume
+    # l2 AND cosine: beam_search_batch consumes
     # sqnorms for both (cosine derives row norms from them) — caching
     # here saves recomputing over the whole shard per query batch
     # (r2 ADVICE low item); int8 traversal view likewise computed ONCE
@@ -874,16 +768,16 @@ def broadcast_search(
 ) -> DataFrame:
     """ZERO-shuffle search for indexes that fit executor memory.
 
-    The dual of :func:`search`, mirroring Spark's broadcast-join vs
-    shuffle-join choice: the whole index (all shards' vectors + graphs)
-    is a Spark broadcast variable; queries run through one narrow
+    The dual of :func:`cached_scan_search`, mirroring Spark's
+    broadcast-join vs shuffle-join choice: the whole index (all shards'
+    vectors + graphs) is a Spark broadcast variable, or the node-local
+    mmap shard map standing in for one; queries run through one narrow
     ``mapInPandas`` where each Arrow batch beam-searches every shard and
-    finalizes its own global top-k — no cogroup shuffle of the corpus, no
-    per-query-block index replication, no merge exchange. This is the
-    regime the reference actually benchmarks (a SIFT1M index resident in
-    RAM, queried by a parallel batch — README.md:120-134); use the
-    cogrouped :func:`search` when the index exceeds the broadcast
-    threshold.
+    finalizes its own global top-k — no shuffle of the corpus and no
+    merge exchange. This is the regime the reference actually benchmarks
+    (a SIFT1M index resident in RAM, queried by a parallel batch —
+    README.md:120-134); use :func:`cached_scan_search` when the index
+    exceeds the broadcast budget.
 
     ``shard_probes``: search only the p nearest shards (IVF-style
     routing over the Vamana shards). ``None`` scans every shard — the

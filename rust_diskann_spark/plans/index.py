@@ -26,7 +26,8 @@ from rust_diskann_spark.params import IndexParams
 from rust_diskann_spark.sources import index_store, vectors as vector_src
 
 # index footprint (bytes) below which search broadcasts the whole index
-# instead of cogrouping per shard — analogous to autoBroadcastJoinThreshold.
+# instead of scanning it from the node-local mmap shard cache — analogous
+# to autoBroadcastJoinThreshold.
 # This is the static CEILING; auto mode additionally derives a per-session
 # byte budget from executor memory (see :func:`auto_broadcast_budget`) —
 # a 100 GB index must never ride the broadcast path just because a row
@@ -80,8 +81,19 @@ def auto_broadcast_budget(spark: SparkSession) -> int:
                 f"{BROADCAST_THRESHOLD_CONF}={override!r} is not a memory "
                 "size (expected forms: '268435456', '256m', '256mb', '4g')"
             ) from exc
-    master = spark.conf.get("spark.master", "")
-    if master.startswith("local"):
+    mem, cores = _executor_resources(spark)
+    try:
+        mem_bytes = _parse_mem(mem)
+    except ValueError:
+        return BROADCAST_INDEX_THRESHOLD
+    return min(BROADCAST_INDEX_THRESHOLD, mem_bytes // (4 * cores))
+
+
+def _executor_resources(spark: SparkSession) -> tuple[str, int]:
+    """(memory string, cores >= 1) of one executor, as the broadcast
+    budget and the feasibility check see it. The memory string is left
+    unparsed so each caller keeps its own parse-failure answer."""
+    if spark.conf.get("spark.master", "").startswith("local"):
         # local mode: the one in-process "executor" lives in the driver
         # JVM and its python workers in what's left of the host
         mem = spark.conf.get("spark.driver.memory", "1g")
@@ -89,11 +101,7 @@ def auto_broadcast_budget(spark: SparkSession) -> int:
     else:
         mem = spark.conf.get("spark.executor.memory", "1g")
         cores = int(spark.conf.get("spark.executor.cores", "1"))
-    try:
-        mem_bytes = _parse_mem(mem)
-    except ValueError:
-        return BROADCAST_INDEX_THRESHOLD
-    return min(BROADCAST_INDEX_THRESHOLD, mem_bytes // (4 * max(cores, 1)))
+    return mem, max(cores, 1)
 
 
 @dataclass
@@ -171,13 +179,16 @@ class DiskANNIndex:
             self._cache_token = shard_cache.index_token(self.path)
         return self._cache_token
 
+    def _footprint_bytes(self) -> int:
+        """Estimated in-memory index size: ``n * (elem*dim + 4*degree)``."""
+        m = self.meta
+        elem = 8 if m.elem_type == "long" else 4
+        return m.num_vectors * (elem * m.dim + 4 * m.max_degree)
+
     def _fits_broadcast(self) -> bool:
         """Auto-mode gate: footprint estimate vs the memory-aware byte
         budget (:func:`auto_broadcast_budget`) — bytes, never row count."""
-        m = self.meta
-        elem = 8 if m.elem_type == "long" else 4
-        est_bytes = m.num_vectors * (elem * m.dim + 4 * m.max_degree)
-        return est_bytes <= auto_broadcast_budget(self.spark)
+        return self._footprint_bytes() <= auto_broadcast_budget(self.spark)
 
     def _broadcast_feasible(self) -> bool:
         """Whether an EXPLICIT ``mode="broadcast"`` request can be
@@ -191,21 +202,12 @@ class DiskANNIndex:
         applies)."""
         if self.spark.conf.get(BROADCAST_THRESHOLD_CONF, None) is not None:
             return False
-        m = self.meta
-        elem = 8 if m.elem_type == "long" else 4
-        est_bytes = m.num_vectors * (elem * m.dim + 4 * m.max_degree)
-        master = self.spark.conf.get("spark.master", "")
-        if master.startswith("local"):
-            mem = self.spark.conf.get("spark.driver.memory", "1g")
-            cores = self.spark.sparkContext.defaultParallelism
-        else:
-            mem = self.spark.conf.get("spark.executor.memory", "1g")
-            cores = int(self.spark.conf.get("spark.executor.cores", "1"))
+        mem, cores = _executor_resources(self.spark)
         try:
             mem_bytes = _parse_mem(mem)
         except ValueError:
             return False
-        return est_bytes * max(cores, 1) <= mem_bytes // 2
+        return self._footprint_bytes() * cores <= mem_bytes // 2
 
     @property
     def params(self) -> IndexParams:
@@ -226,30 +228,26 @@ class DiskANNIndex:
         queries: DataFrame,
         k: int,
         beam_width: int = 64,
-        query_blocks: int | None = None,
         shard_probes: int | str | None = None,
         mode: str = "auto",
     ) -> DataFrame:
         """Reference A7 (lib.rs:635-693): (query_id, rank, id, dist).
-        ``shard_probes`` (broadcast + scan modes): IVF-style shard
-        routing — search only the p shards whose routing set (medoid +
-        FPS entries) is nearest; None = all (exact shard-and-merge);
-        ``'auto'`` adapts the probe set per query from the routing
-        geometry (every shard within a margin of the best — covers all
-        cap-split pieces of the query's home cluster without the caller
-        knowing the piece count; operators/search.py _probe_mask). In
-        scan mode each shard search receives only the query rows that
-        probe it — per-shard work drops to ~n_q * p / n_shards, and a
-        shard no query probes is not searched, while the cached shards
-        stay put (the partition-pruning analog for a scan). Cogroup
-        cannot route (it replicates every query inside the exchange) and
-        raises.
+        ``shard_probes``: IVF-style shard routing — search only the p
+        shards whose routing set (medoid + FPS entries) is nearest;
+        None = all (exact shard-and-merge); ``'auto'`` adapts the probe
+        set per query from the routing geometry (every shard within a
+        margin of the best — covers all cap-split pieces of the query's
+        home cluster without the caller knowing the piece count;
+        operators/search.py _probe_mask). In scan mode each shard search
+        receives only the query rows that probe it — per-shard work
+        drops to ~n_q * p / n_shards, and a shard no query probes is not
+        searched, while the cached shards stay put (the partition-pruning
+        analog for a scan).
 
         ``mode``: "auto" picks by the footprint estimate below;
-        "broadcast"/"scan"/"cogroup" force a strategy — the same escape
-        hatch Spark gives joins (the broadcast() hint) for when the
-        caller knows executor memory better than the static threshold
-        does.
+        "broadcast"/"scan" force a strategy — the same escape hatch Spark
+        gives joins (the broadcast() hint) for when the caller knows
+        executor memory better than the static threshold does.
 
         Physical strategy (the broadcast-join vs shuffle-join analogy):
 
@@ -262,17 +260,15 @@ class DiskANNIndex:
           broadcast variable and search is ONE narrow mapInPandas over
           queries — zero shuffles (the reference's own regime: a
           RAM-resident index, parallel query batch, README.md:120-134).
-        - **scan mode** otherwise (the 100 TB steady-state path): each
-          shard lives in the node-local mmap shard cache, decoded once per
-          node from the index parquet; each query batch is collected +
-          broadcast (the small side) and the shards it probes are packed
-          into at most one Python task per core, each searching its
-          shards from the cache. Per batch, only the top-k merge shuffles
-          (O(q*k'*shards) rows) — corpus bytes never move.
-        - **cogrouped mode** (explicit only): corpus and queries cogroup-
-          exchange per batch. Right only for one-shot searches or query
-          sets too large to collect; ``query_blocks=None`` sizes task
-          fan-out to ``defaultParallelism // num_shards``.
+        - **scan mode** otherwise (the 100 TB path): each shard lives in
+          the node-local mmap shard cache, decoded once per node from the
+          index parquet; the query batch is collected + broadcast (the
+          small side) in chunks of at most
+          ``operators.search.SCAN_QUERY_COLLECT_CAP`` rows, and each
+          chunk's probed shards are packed into at most one Python task
+          per core, each searching its shards from the cache. Per batch,
+          only the top-k merge shuffles (O(q*k'*shards) rows) — corpus
+          bytes never move. One-shot searches take this path too.
 
         Serving-loop note (broadcast mode): the query frame is
         repartitioned to ``defaultParallelism`` only when it has fewer
@@ -283,67 +279,35 @@ class DiskANNIndex:
         median task 0.63 s vs max 0.82 s per batch; 3x finer partitions
         recovered ~20% steady QPS).
         """
-        if mode not in ("auto", "broadcast", "scan", "cogroup"):
-            raise ValueError(
-                f"mode must be auto|broadcast|scan|cogroup, got {mode!r}"
-            )
-        use_broadcast = mode == "broadcast" or (
-            mode == "auto" and self._fits_broadcast()
-        )
-        if shard_probes is not None and mode == "cogroup":
-            # cogroup replicates every query to every shard inside the
-            # exchange — silently ignoring the routing knob would hand
-            # back an unrouted full scan (r2 ADVICE item)
-            raise ValueError(
-                "shard_probes is not supported in cogroup mode"
-            )
-        if use_broadcast:
+        if self._use_broadcast(mode):
             return search_ops.broadcast_search(
                 queries, self.vectors, self.graph, self.params, k, beam_width,
                 shard_probes=shard_probes, shards_bc=self._broadcast_shards(),
             )
-        if mode in ("auto", "scan"):
-            # scan mode collects the query batch driver-side (a capped
-            # limit-collect — the collect itself is the gate, evaluated
-            # once; r3 ADVICE replaced the separate pre-count, which
-            # double-evaluated the lineage and could race non-deterministic
-            # sources). In auto mode a too-large batch falls through to the
-            # cogrouped search (which never collects) instead of OOMing the
-            # driver; explicit scan mode propagates the error.
-            try:
-                # residency is the node-local mmap shard cache, so no
-                # corpus bytes ever shuffle or persist in the JVM
-                # (operators/shard_cache.py). Pass the routing BUILDER:
-                # the batch is gated first, so an oversized batch falls
-                # through to cogroup without running the routing job
-                # (r4 ADVICE)
-                return search_ops.cached_scan_search(
-                    queries, self.path,
-                    self._get_cache_token(), shard_cache.cache_root(),
-                    self.params, k, beam_width,
-                    shard_probes=shard_probes,
-                    routing=self._get_scan_routing
-                    if shard_probes is not None
-                    else None,
-                )
-            except search_ops.ScanBatchTooLarge:
-                if mode == "scan":
-                    raise
-                if shard_probes is not None:
-                    # auto + probes + oversized batch: the cogroup
-                    # fallback cannot route — surface it rather than
-                    # silently full-scanning (r2 ADVICE item)
-                    raise ValueError(
-                        "shard_probes requires a collectable query batch "
-                        "(scan mode); this batch exceeded the scan collect "
-                        "cap and only the unrouted cogroup path can run it"
-                    )
-        if query_blocks is None:
-            par = self.spark.sparkContext.defaultParallelism
-            query_blocks = max(1, par // max(self.meta.num_shards, 1))
-        return search_ops.search(
-            queries, self.vectors, self.graph, self.params, k, beam_width,
-            query_blocks=query_blocks,
+        # residency is the node-local mmap shard cache, so no corpus
+        # bytes ever shuffle or persist in the JVM
+        # (operators/shard_cache.py). Pass the routing BUILDER: it runs
+        # at most once per handle, and only for a batch with rows
+        return search_ops.cached_scan_search(
+            queries, self.path,
+            self._get_cache_token(), shard_cache.cache_root(),
+            self.params, k, beam_width,
+            shard_probes=shard_probes,
+            routing=self._get_scan_routing
+            if shard_probes is not None
+            else None,
+        )
+
+    def _use_broadcast(self, mode: str) -> bool:
+        """Resolve ``mode`` to broadcast (True) or scan (False)."""
+        if mode not in ("auto", "broadcast", "scan"):
+            # a typo ("broadcst") or a retired mode must fail loudly, not
+            # fall into some other strategy
+            raise ValueError(
+                f"mode must be auto|broadcast|scan, got {mode!r}"
+            )
+        return mode == "broadcast" or (
+            mode == "auto" and self._fits_broadcast()
         )
 
     def search(
@@ -351,10 +315,9 @@ class DiskANNIndex:
         queries: DataFrame,
         k: int,
         beam_width: int = 64,
-        query_blocks: int | None = None,
     ) -> DataFrame:
         """Reference A8 (lib.rs:696-701): ids only."""
-        return self.search_with_dists(queries, k, beam_width, query_blocks).select(
+        return self.search_with_dists(queries, k, beam_width).select(
             "query_id", "rank", "id"
         )
 
@@ -382,21 +345,9 @@ class DiskANNIndex:
           shards spread over at most one task per core, each task decodes
           its shards into the node-local mmap cache and returns their
           routing points, so the first batch pays no decode.
-        - cogroup: persist the raw tables; the per-batch cogroup
-          exchange re-reads them every batch.
         """
-        if mode not in ("auto", "broadcast", "scan", "cogroup"):
-            # same whitelist as search_with_dists: a typo ("broadcst")
-            # would otherwise fall into the cogroup else-branch and
-            # silently persist GBs of raw tables for nothing (r4 ADVICE)
-            raise ValueError(
-                f"mode must be auto|broadcast|scan|cogroup, got {mode!r}"
-            )
         m = self.meta
-        use_broadcast = mode == "broadcast" or (
-            mode == "auto" and self._fits_broadcast()
-        )
-        if use_broadcast:
+        if self._use_broadcast(mode):
             self._broadcast_shards()
             par = self.spark.sparkContext.defaultParallelism
             elem_sql = "bigint" if m.elem_type == "long" else "float"
@@ -408,25 +359,19 @@ class DiskANNIndex:
                 probe, self.vectors, self.graph, self.params, k=1,
                 beam_width=1, shards_bc=self._shards_bc,
             ).count()
-        elif mode in ("auto", "scan"):
+        else:
             # the routing job decodes every shard through get_or_decode,
             # so one pass populates the whole node-local cache AND yields
             # the probe-routing points
             self._get_scan_routing()
-        else:
-            self.vectors = self.vectors.persist()
-            self.graph = self.graph.persist()
-            self.vectors.count()
-            self.graph.count()
         return self
 
     def close(self) -> None:
         """Release every piece of cluster state this handle pinned —
-        the mmap shard cache and routing points, the shard broadcast,
-        and the cogroup-warm table persists. A long-lived session cycling
-        many index handles otherwise accumulates cached tables/broadcasts
-        until executor storage fills (r4 verdict lifecycle item). The
-        handle stays usable after close(): the lazy caches rebuild on
+        the mmap shard cache and routing points, and the shard broadcast.
+        A long-lived session cycling many index handles otherwise
+        accumulates cache trees/broadcasts until executor storage fills.
+        The handle stays usable after close(): the lazy caches rebuild on
         next use."""
         self._scan_routing = None
         if self._cache_token is not None:
@@ -457,9 +402,6 @@ class DiskANNIndex:
                 self._shards_bc.destroy()
             finally:
                 self._shards_bc = None
-        # no-ops when warm("cogroup") never persisted them
-        self.vectors.unpersist()
-        self.graph.unpersist()
 
 
 def build_index(
@@ -545,11 +487,12 @@ def build_index(
         if params.shard_by == "kmeans":
             # the straggler cap-split may have produced MORE units than
             # requested (dense 0..n_units-1); metadata must record the
-            # actual count or the cogrouped search's synthesized shard
-            # range would silently skip the extras. The count comes from
-            # the cap-split's own dense numbering (driver-side) — the
-            # former max("shard") aggregate re-ran the whole assignment
-            # lineage, one extra full corpus pass per build (r11, §1.2)
+            # actual count or every search's shard range (the scan plan,
+            # the routing job, the mmap shard map) would silently skip
+            # the extras. The count comes from the cap-split's own dense
+            # numbering (driver-side) — the former max("shard") aggregate
+            # re-ran the whole assignment lineage, one extra full corpus
+            # pass per build (r11, §1.2)
             sharded, num_shards_eff = build_ops.assign_shards_counted(
                 base, params.num_shards, params.metric, params.seed
             )

@@ -4,7 +4,7 @@ The driver fixtures cap at 2,000 vectors (sf0.1); the reference's
 published numbers are for SIFT1M (1M x 128-d, M=64, L=128: build
 3,916.98 s ~ 255 vec/s; search 24,379 q/s at recall 0.99971 on Apple M4
 Max). This script synthesizes a deterministic N x 128-d corpus, runs the
-sharded build + broadcast/cogroup search on local[$SPARK_GRAFT_CPUS],
+sharded build + broadcast/scan search on local[$SPARK_GRAFT_CPUS],
 and prints one JSON line with throughput + recall so rounds can be
 compared at a reference-comparable scale.
 

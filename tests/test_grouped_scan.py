@@ -2,8 +2,7 @@
 ``grouped_scan_search``) has been removed; co-probed pieces are served by
 the per-shard cached scan. What remains of this file's contract is that
 ``warm`` refuses a mode it does not know — including the retired
-``grouped`` mode — instead of falling into the cogroup branch and
-persisting the raw tables for nothing."""
+``grouped`` mode — instead of silently running some other strategy."""
 
 import numpy as np
 import pytest
@@ -23,7 +22,7 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="grouped"):
         idx.warm("grouped")
-    with pytest.raises(ValueError, match="auto|broadcast|scan|cogroup"):
+    with pytest.raises(ValueError, match="auto|broadcast|scan"):
         idx.warm("groupd")
     assert idx._shards_bc is None and idx._scan_routing is None
     idx.close()

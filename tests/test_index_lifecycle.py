@@ -128,9 +128,10 @@ def test_hamming_index_end_to_end(spark, tmp_path):
 
 
 def test_broadcast_and_cogroup_search_agree(spark, tmp_path):
-    """The two physical search strategies (broadcast index vs cogrouped
-    shards) are alternative plans for the same logical query — results
-    must match row-for-row."""
+    """The two physical search strategies (broadcast index vs cached
+    scan of the mmap shard cache) are alternative plans for the same
+    logical query — results must match row-for-row. The name is kept so
+    the test keeps its history; the cogrouped strategy is gone."""
     from rust_diskann_spark.operators import search as search_ops
 
     rng = np.random.default_rng(9)
@@ -146,9 +147,7 @@ def test_broadcast_and_cogroup_search_agree(spark, tmp_path):
     via_bc = search_ops.broadcast_search(
         q, idx.vectors, idx.graph, idx.params, k=5, beam_width=32
     )
-    via_cg = search_ops.search(
-        q, idx.vectors, idx.graph, idx.params, k=5, beam_width=32
-    )
+    via_cg = idx.search_with_dists(q, k=5, beam_width=32, mode="scan")
     rows_bc = sorted(map(tuple, via_bc.collect()))
     rows_cg = sorted(map(tuple, via_cg.collect()))
     assert [r[:3] for r in rows_bc] == [r[:3] for r in rows_cg]
@@ -158,6 +157,7 @@ def test_broadcast_and_cogroup_search_agree(spark, tmp_path):
     # side may round-robin to fan out across the cluster)
     plan = via_bc._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
+    idx.close()
 
 
 def test_shard_probe_routing(spark, tmp_path):
@@ -212,8 +212,8 @@ def test_shard_probe_routing(spark, tmp_path):
 def test_scan_mode_probe_routing(spark, tmp_path):
     """Probed routing through the SCAN path (resident corpus, routed query
     batches): identical rows to broadcast-mode probing — both route on the
-    same medoid+entry minimum — and the cogroup path still refuses the
-    knob (it replicates every query inside its exchange)."""
+    same medoid+entry minimum — and the retired cogroup mode is
+    refused."""
     rng = np.random.default_rng(21)
     centers = rng.standard_normal((4, 8)) * 10
     mat = np.concatenate(

@@ -278,17 +278,15 @@ def test_auto_mode_memory_aware_broadcast_gate(spark, tmp_path):
 
 
 def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypatch):
-    """r3 ADVICE: the scan-batch cap gate is the capped collect itself —
-    evaluated once inside cached_scan_search — and auto mode reroutes an
-    oversized batch to the cogrouped search (never collects); explicit
-    scan mode propagates the error."""
+    """A query batch over the scan collect cap runs through the cached
+    scan in cap-sized chunks (one collect + broadcast each, one merge),
+    in auto and in explicit scan mode, with and without shard routing —
+    row for row the same as broadcast mode. The name is kept so the test
+    keeps its history; there is no cogroup fallback any more."""
     import tempfile, shutil, os as _os
-
-    import pytest as _pytest
 
     from rust_diskann_spark import IndexParams, build_index
     from rust_diskann_spark.operators import search as search_ops
-    from rust_diskann_spark.operators import shard_cache
     from rust_diskann_spark.plans import index as plans_index
 
     emb = spark.read.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
@@ -304,24 +302,39 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
         vectors, path,
         params=IndexParams(max_degree=16, build_beam_width=32, num_shards=2, seed=3),
     )
-    expected = sorted(
-        map(tuple, idx.search_with_dists(queries, k=3, beam_width=32,
-                                         mode="broadcast").collect())
-    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    expected = rows(idx.search_with_dists(queries, k=3, beam_width=32,
+                                          mode="broadcast"))
+    expected_auto = rows(idx.search_with_dists(
+        queries, k=3, beam_width=32, shard_probes="auto", mode="broadcast"))
     # force the auto path past broadcast and over the scan collect cap
     monkeypatch.setattr(plans_index, "BROADCAST_INDEX_THRESHOLD", -1)
     monkeypatch.setattr(search_ops, "SCAN_QUERY_COLLECT_CAP", 3)
     res = idx.search_with_dists(queries, k=3, beam_width=32, mode="auto")
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan  # routed to cogroup, not scan
-    # r4 ADVICE: the rerouted batch must NOT leave scan state pinned —
-    # no routing job ran and no shard was decoded into the mmap cache
-    assert idx._scan_routing is None
-    assert not _os.path.exists(_os.path.join(
-        shard_cache.cache_root(), idx._get_cache_token()))
-    assert sorted(map(tuple, res.collect())) == expected
-    with _pytest.raises(search_ops.ScanBatchTooLarge):
-        idx.search_with_dists(queries, k=3, beam_width=32, mode="scan")
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert plan.count("MapInPandas") == -(-n_q // 3)  # one per chunk
+    assert rows(res) == expected
+    assert rows(idx.search_with_dists(queries, k=3, beam_width=32,
+                                      mode="scan")) == expected
+    # routing no longer needs a collectable batch: the oversized batch
+    # probes exactly the shards broadcast mode probes, and the routing
+    # job runs once for the handle, not once per chunk
+    routing_jobs = []
+    real_routing = search_ops.cached_scan_routing
+    monkeypatch.setattr(
+        search_ops, "cached_scan_routing",
+        lambda *a, **kw: routing_jobs.append(1) or real_routing(*a, **kw),
+    )
+    for mode in ("auto", "scan"):
+        assert rows(idx.search_with_dists(
+            queries, k=3, beam_width=32, shard_probes="auto", mode=mode
+        )) == expected_auto
+    assert len(routing_jobs) == 1
+    idx.close()
     shutil.rmtree(path, ignore_errors=True)
 
 
@@ -363,8 +376,8 @@ def test_merged_metadata_records_per_shard_build_knobs(spark, tmp_path):
 
 
 def test_warm_rejects_unknown_mode(spark, tmp_path):
-    """r4 ADVICE: a typo'd warm mode must raise, not silently fall into
-    the cogroup else-branch and persist GBs of raw tables."""
+    """A typo'd or retired warm/search mode must raise, not
+    silently run some other strategy."""
     import numpy as np
 
     from rust_diskann_spark import IndexParams, build_index
@@ -380,14 +393,24 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="broadcst"):
         idx.warm("broadcst")
+    # the retired cogroup mode is an unknown mode like any other, and the
+    # error names the modes that remain
+    valid = r"auto\|broadcast\|scan, got 'cogroup'"
+    with pytest.raises(ValueError, match=valid):
+        idx.warm("cogroup")
+    q = df.limit(2).select(
+        F.col("id").alias("query_id"), F.col("vec").alias("qvec")
+    )
+    with pytest.raises(ValueError, match=valid):
+        idx.search_with_dists(q, k=1, beam_width=8, mode="cogroup")
 
 
 def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
     """r4 verdict lifecycle item: close() must release the scan-side
-    state (mmap shard cache + routing points), destroy the shard
-    broadcast, and unpersist cogroup-warm persists so a session cycling
-    many handles doesn't accumulate cached tables. The handle stays usable afterwards
-    (lazy caches rebuild)."""
+    state (mmap shard cache + routing points) and destroy the shard
+    broadcast, so a session cycling many handles doesn't accumulate
+    cache trees or broadcasts. The handle stays usable afterwards (lazy
+    caches rebuild)."""
     import os as _os
 
     import numpy as np
@@ -410,16 +433,11 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
     assert _os.path.isdir(token_dir)
     idx.warm("broadcast")
     assert idx._shards_bc is not None
-    idx.warm("cogroup")
-    assert idx.vectors.storageLevel.useMemory
-    assert idx.graph.storageLevel.useMemory
 
     idx.close()
     assert idx._shards_bc is None
     assert idx._scan_routing is None and idx._cache_token is None
     assert not _os.path.exists(token_dir)
-    assert not idx.vectors.storageLevel.useMemory
-    assert not idx.graph.storageLevel.useMemory
     # still usable: lazy state rebuilds on demand
     q = df.limit(3).select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")

@@ -366,3 +366,90 @@ def test_scan_dispatch_width_is_min_cores_probed_shards(spark, tmp_path,
         ))
         assert got == want
     idx.close()
+
+
+def test_query_chunks_split_at_cap(spark, monkeypatch):
+    """_query_chunks cuts an oversized batch into cap-sized chunks, each
+    query exactly once; a batch under the cap is one chunk from one
+    evaluation of its lineage; an empty batch is one empty chunk."""
+    import pandas as pd
+
+    from rust_diskann_spark.operators import search as search_ops
+
+    monkeypatch.setattr(search_ops, "SCAN_QUERY_COLLECT_CAP", 3)
+    base = spark.range(10).select(
+        F.col("id").alias("query_id"),
+        F.array(F.col("id").cast("float"), F.lit(1.0).cast("float"))
+        .alias("qvec"),
+    )
+    chunks = list(search_ops._query_chunks(base))
+    assert [len(c) for c in chunks] == [3, 3, 3, 1]
+    qids = [int(x) for c in chunks for x in c["query_id"]]
+    assert sorted(qids) == list(range(10))
+    for c in chunks:
+        for qid, qv in zip(c["query_id"], c["qvec"]):
+            assert list(qv) == [float(qid), 1.0]
+
+    # under the cap: one chunk, and the source rows are evaluated once
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    small = base.filter(F.col("query_id") < 3).mapInPandas(
+        count_rows, base.schema
+    )
+    chunks = list(search_ops._query_chunks(small))
+    assert [len(c) for c in chunks] == [3]
+    assert seen.value == 3
+
+    chunks = list(search_ops._query_chunks(base.limit(0)))
+    assert len(chunks) == 1 and len(chunks[0]) == 0
+    assert isinstance(chunks[0], pd.DataFrame)
+
+
+def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
+                                            monkeypatch):
+    """A scan task searching two shards writes one shard_task record per
+    shard, and each shard's window starts at its own cache lookup: the
+    second record's t0 is at or after the end of the first one's."""
+    import json
+
+    import pandas as pd
+
+    from rust_diskann_spark.operators import search as search_ops
+
+    prof = tmp_path / "prof"
+    prof.mkdir()
+    monkeypatch.setattr(search_ops, "_PROFILE_DIR", str(prof))
+    token = shard_cache.index_token(idx_path)
+    root = shard_cache.cache_root()
+    rng = np.random.default_rng(5)
+    q_pd = pd.DataFrame({
+        "query_id": np.arange(4, dtype=np.int64),
+        "qvec": list(rng.standard_normal((4, 8)).astype(np.float32)),
+    })
+
+    class _FakeBroadcast:
+        value = (q_pd, None, [[0, 1]])
+
+    run_task = search_ops._scan_task(
+        _FakeBroadcast(), root, token, idx_path, "l2", np.float32, 3, 16
+    )
+    frames = list(run_task(0))
+    assert len(frames) == 2
+    assert all(len(f) == 4 * 3 for f in frames)
+    recs = [
+        json.loads(line)
+        for f in sorted(prof.iterdir())
+        for line in f.read_text().splitlines()
+    ]
+    assert [r["path"] for r in recs] == ["shard_task", "shard_task"]
+    assert set(recs[0]) == {"path", "source", "t0", "n_rows", "n_q",
+                            "decode", "kernel", "emit", "wall"}
+    first, second = recs
+    # wall is rounded to the microsecond
+    assert second["t0"] >= first["t0"] + first["wall"] - 1e-6
+    shard_cache.drop_index_cache(root, token)
