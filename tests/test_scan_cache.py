@@ -453,3 +453,72 @@ def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
     # wall is rounded to the microsecond
     assert second["t0"] >= first["t0"] + first["wall"] - 1e-6
     shard_cache.drop_index_cache(root, token)
+
+
+def test_drop_nested_zip_finders_keeps_top_level(tmp_path):
+    """The helper forgets the per-sub-package zipimporters of an archive
+    on sys.path and keeps the archive's own importer; imports still work
+    afterwards, from importers rebuilt on demand."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from rust_diskann_spark.operators.search import _drop_nested_zip_finders
+
+    archive = str(tmp_path / "nested.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("rdszpkg/__init__.py", "")
+        zf.writestr("rdszpkg/sub/__init__.py", "")
+        zf.writestr("rdszpkg/sub/a.py", "A = 1\n")
+        zf.writestr("rdszpkg/sub/b.py", "B = 2\n")
+    nested = [os.path.join(archive, "rdszpkg"),
+              os.path.join(archive, "rdszpkg", "sub")]
+    saved_path = list(sys.path)
+    saved_modules = set(sys.modules)
+    saved_cache = dict(sys.path_importer_cache)
+    sys.path.insert(0, archive)
+    try:
+        a = importlib.import_module("rdszpkg.sub.a")
+        assert a.A == 1
+        cache = sys.path_importer_cache
+        assert all(isinstance(cache.get(p), zipimport.zipimporter)
+                   for p in nested)
+
+        _drop_nested_zip_finders()
+
+        assert not any(p in cache for p in nested)
+        assert isinstance(cache[archive], zipimport.zipimporter)
+        assert cache[archive].prefix == ""
+        assert not any(isinstance(f, zipimport.zipimporter) and f.prefix
+                       for f in cache.values())
+        importlib.invalidate_caches()
+        b = importlib.import_module("rdszpkg.sub.b")
+        assert b.B == 2
+    finally:
+        sys.path[:] = saved_path
+        for name in set(sys.modules) - saved_modules:
+            del sys.modules[name]
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+
+
+def test_packed_tasks_hold_no_nested_zip_finders(spark):
+    """Every _map_packed task body starts with the worker's nested
+    zipimporters dropped, so the next task's invalidate_caches() re-reads
+    each archive once."""
+    from rust_diskann_spark.operators.search import _map_packed
+
+    def run_task(t):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        n = sum(isinstance(f, zipimport.zipimporter) and bool(f.prefix)
+                for f in list(sys.path_importer_cache.values()))
+        yield pd.DataFrame({"t": [t], "nested": [n]})
+
+    rows = _map_packed(spark, 4, run_task, "t BIGINT, nested BIGINT").collect()
+    assert sorted(r["t"] for r in rows) == [0, 1, 2, 3]
+    assert [r["nested"] for r in rows] == [0, 0, 0, 0]
