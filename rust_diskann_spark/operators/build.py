@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from rust_diskann_spark.core import vamana
 from rust_diskann_spark.params import IndexParams
+from rust_diskann_spark.prelude import _task_prelude
 
 GRAPH_SCHEMA = (
     "shard INT, id BIGINT, neighbors ARRAY<BIGINT>, medoid BIGINT, "
@@ -87,6 +88,7 @@ def assign_shards_counted(
     vec_type = vectors.schema["vec"].dataType.simpleString()
 
     def assign_fn(batches):
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -158,6 +160,7 @@ def assign_shards_overlapped(
     vec_type = vectors.schema["vec"].dataType.simpleString()
 
     def assign_cells(batches):
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -293,6 +296,7 @@ def build_graph(vectors: DataFrame, params: IndexParams) -> DataFrame:
         )
 
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        _task_prelude()
         pdf = pdf.sort_values("id").reset_index(drop=True)
         shard = int(pdf["shard"].iloc[0])
         dtype = np.int64 if params.metric == "hamming" else np.float32

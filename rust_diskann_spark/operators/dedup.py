@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from rust_diskann_spark.functions import text as TX
 from rust_diskann_spark.functions.distance import distance_expr
+from rust_diskann_spark.prelude import _task_prelude
 
 # LSH bucket pair generation is quadratic per bucket; buckets above this
 # size are split into positional blocks so the B^2/2 work of a hot bucket
@@ -79,6 +80,7 @@ def _blocked_bucket_pairs(
     )
 
     def split_blocks(batches):
+        _task_prelude()
         for pdf in batches:
             rows: dict[str, list] = {
                 f"{c}_{s}": [] for s in ("a", "b") for c in payload
@@ -106,6 +108,7 @@ def _blocked_bucket_pairs(
     )
 
     def gen_pairs(batches):
+        _task_prelude()
         empty_cols: dict[str, list] = {"doc_a": [], "doc_b": []}
         if with_simhash:
             empty_cols["hamming"] = []
@@ -209,6 +212,7 @@ def minhash_signatures(
     P = TX.HASH_P
 
     def fn(batches):
+        _task_prelude()
         for pdf in batches:
             # pass 1: tokenize; intern shingles into a batch vocabulary.
             # Templated corpora repeat shingles heavily across docs, so
@@ -596,6 +600,7 @@ def simhash_signatures(
     pows = 1 << np.arange(BITS, dtype=np.int64)
 
     def fn(batches):
+        _task_prelude()
         for pdf in batches:
             # batch token vocabulary: md5 + bit-expand once per UNIQUE
             # token (vocabularies repeat heavily across docs), then each
@@ -760,6 +765,7 @@ def embedding_near_duplicates(
     )
 
     def block_sims(a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
+        _task_prelude()
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []}).astype(
             {"id_a": "int64", "id_b": "int64", "cosine_sim": "float64"}
         )
@@ -824,6 +830,7 @@ def embedding_near_duplicates_lsh(
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def bucket_ids(v: pd.Series) -> pd.Series:
+        _task_prelude()
         mat = np.stack(v.to_numpy())  # (batch, dim)
         bits = (mat @ planes.T) > 0  # (batch, tables*planes)
         b = bits.reshape(len(mat), n_tables, n_planes) @ pow2  # (batch, tables)

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rust_diskann_spark.functions.distance import distance_expr, numpy_distance_matrix
+from rust_diskann_spark.prelude import _task_prelude
 
 ASSIGNED_SCHEMA = "cell INT, id BIGINT, vec ARRAY<DOUBLE>"
 
@@ -59,6 +60,7 @@ def _base(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 def _assign_map(cents: np.ndarray, metric: str):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -114,6 +116,7 @@ def _route_map(cents: np.ndarray, metric: str, n_probe: int):
     paths stay on the literal expression below the threshold."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -178,6 +181,7 @@ def _partials_map(cents: np.ndarray, metric: str):
     the dominant cost of ivf_knn_fullprobe (VERDICT r1)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         sums = np.zeros_like(cents)
         counts = np.zeros(len(cents), dtype=np.int64)
         for pdf in batches:

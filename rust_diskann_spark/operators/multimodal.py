@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rust_diskann_spark.prelude import _task_prelude
+
 HASH_P = 2_147_483_647  # shared with functions/text.py
 FEATURE_DIM = 8
 MAX_W, MAX_H = 2048, 1536
@@ -93,6 +95,7 @@ def decode_image_features(
     decode = decoder or _fake_decode
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -122,6 +125,7 @@ def resize_images(
     decode = decoder or _fake_decode
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -155,6 +159,7 @@ def sample_frames(
     decode = decoder or _fake_decode
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             out_id, out_fi, out_fh = [], [], []
             for i, c in zip(pdf["id"], pdf["content"]):
@@ -179,6 +184,7 @@ def audio_stats(
     decode = decoder or _fake_decode
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

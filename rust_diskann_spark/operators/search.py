@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from rust_diskann_spark.core import vamana
 from rust_diskann_spark.params import IndexParams
+from rust_diskann_spark.prelude import (  # noqa: F401  (re-exported)
+    _drop_nested_zip_finders,
+    _task_prelude,
+)
 
 RESULT_SCHEMA = "query_id BIGINT, id BIGINT, dist DOUBLE"
 
@@ -374,39 +378,20 @@ def _pack_shards(loads: dict[int, int], n_tasks: int) -> list[list[int]]:
     return bins
 
 
-def _drop_nested_zip_finders() -> None:
-    """Forget the worker's per-sub-package zipimporters.
-
-    Before every task PySpark 4.1's ``setup_spark_files`` calls
-    ``importlib.invalidate_caches()``, and on Python 3.11 each cached
-    ``zipimporter`` re-reads its archive's whole central directory. A
-    worker caches one importer per imported sub-package of an archive
-    as well (``pyspark.zip/pyspark/sql/`` ...): a local-mode worker held
-    16, reading pyspark.zip 12 times and the spark-core jar twice per
-    task. Only the top-level importers are
-    kept, so each archive is still refreshed once per task; a dropped
-    importer is rebuilt on its package's next import from the refreshed
-    ``zipimport._zip_directory_cache``. Call first in a task body."""
-    import sys
-    import zipimport
-
-    cache = sys.path_importer_cache
-    for key, finder in list(cache.items()):
-        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
-            cache.pop(key, None)
-
-
 def _map_packed(spark, n_tasks: int, run_task, schema: str) -> DataFrame:
     """One Python task per bin: ``spark.range(0, n, 1, n)`` holds one task
     index per partition and ``run_task(t)`` yields bin ``t``'s frames.
     Shards are packed because every Python task pays a fixed cost,
-    however little it searches. On 4 vCPUs an idle task costs ~0.05 CPU-s
-    of archive re-reads in PySpark 4.1's ``setup_spark_files`` (after
-    :func:`_drop_nested_zip_finders`), ~0.04 CPU-s of the worker
-    daemon's ``gc.collect()`` and ~0.07 CPU-s in the JVM."""
+    however little it searches. On 4 vCPUs, with :func:`_task_prelude`
+    run first, an idle task costs ~0.10-0.13 CPU-s of process-tree CPU
+    (0.20-0.23 without it): ~0.016-0.019 CPU-s in its Python worker,
+    mostly PySpark 4.1's per-task archive re-reads in
+    ``setup_spark_files``, under 0.001 CPU-s of the worker daemon's
+    ``gc.collect()``, and the rest, ~0.1 CPU-s, in the JVM and the
+    driver."""
 
     def run(batches):
-        _drop_nested_zip_finders()
+        _task_prelude()
         for pdf in batches:
             for t in pdf["id"]:
                 yield from run_task(int(t))
@@ -828,9 +813,9 @@ def broadcast_search(
         )
 
     def run(batches):
+        _task_prelude()
         from time import perf_counter as _pc
 
-        _drop_nested_zip_finders()
         local = bc.value
         for q_pdf in batches:
             if len(q_pdf) == 0:
@@ -939,7 +924,8 @@ def broadcast_search(
     # steady QPS). Pre-partitioned query frames (>= par partitions, the
     # serving-loop pattern) are left untouched — no per-batch exchange.
     # Each of the 3x partitions is one Python task and pays the fixed
-    # per-task cost _map_packed's docstring gives.
+    # per-task cost _map_packed's docstring gives: ~0.10-0.13 CPU-s on
+    # 4 vCPUs, a fraction of its cost when 3x was chosen at 1M.
     par = spark.sparkContext.defaultParallelism
     if q.rdd.getNumPartitions() < par:
         q = q.repartition(3 * par)

@@ -23,6 +23,7 @@ from rust_diskann_spark.operators import medoid as medoid_ops
 from rust_diskann_spark.operators import search as search_ops
 from rust_diskann_spark.operators import shard_cache
 from rust_diskann_spark.params import IndexParams
+from rust_diskann_spark.prelude import _task_prelude
 from rust_diskann_spark.sources import index_store, vectors as vector_src
 
 # index footprint (bytes) below which search broadcasts the whole index
@@ -386,12 +387,15 @@ class DiskANNIndex:
             # under RDS_SCAN_CACHE_DIR not matching a live index (the
             # token is content-derived, see shard_cache.index_token).
             root, token = shard_cache.cache_root(), self._cache_token
+
+            def drop(_it):
+                _task_prelude()
+                shard_cache.drop_index_cache(root, token)
+
             try:
                 sc = self.spark.sparkContext
                 par = max(sc.defaultParallelism, 1)
-                sc.parallelize(range(par), par).foreachPartition(
-                    lambda _it: shard_cache.drop_index_cache(root, token)
-                )
+                sc.parallelize(range(par), par).foreachPartition(drop)
             except Exception:
                 pass  # a dying session must still release driver state
             shard_cache.drop_index_cache(root, token)

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rust_diskann_spark.prelude import _task_prelude
+
 _ELEM = {
     "fvecs": (np.dtype("<f4"), 4, "ARRAY<FLOAT>"),
     "ivecs": (np.dtype("<i4"), 4, "ARRAY<INT>"),
@@ -115,6 +117,7 @@ def read_vecs(
     cap = max_vectors
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _task_prelude()
         for pdf in batches:
             for p, content in zip(pdf["path"], pdf["content"]):
                 mat = decode_vecs(bytes(content), kind, cap)

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from rust_diskann_spark.prelude import _task_prelude
+
 
 def load_vectors(
     spark: SparkSession,
@@ -108,6 +110,7 @@ def with_dense_ids(
     out_cols = [f.name for f in out_schema.fields]
 
     def add_ids(batches):
+        _task_prelude()
         # mapInPandas runs once per partition; batches arrive in partition
         # order, so a running local counter + the partition's offset give
         # the global dense id without any further exchange

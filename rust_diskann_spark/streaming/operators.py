@@ -34,6 +34,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rust_diskann_spark.prelude import _task_prelude
+
 DEFAULT_GAP = "30 minutes"
 DEFAULT_WATERMARK = "2 hours"
 
@@ -148,6 +150,7 @@ def user_running_stats(
         ev = ev.withWatermark("event_ts", watermark)
 
     def update(key, pdfs, state):
+        _task_prelude()
         n, total, max_ts = state.get if state.exists else (0, 0.0, 0)
         for pdf in pdfs:
             if len(pdf) == 0:
