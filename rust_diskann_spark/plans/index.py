@@ -239,11 +239,8 @@ class DiskANNIndex:
         set per query from the routing geometry (every shard within a
         margin of the best — covers all cap-split pieces of the query's
         home cluster without the caller knowing the piece count;
-        operators/search.py _probe_mask). In scan mode each shard search
-        receives only the query rows that probe it — per-shard work
-        drops to ~n_q * p / n_shards, and a shard no query probes is not
-        searched, while the cached shards stay put (the partition-pruning
-        analog for a scan).
+        operators/search.py _probe_mask). Either mode searches a shard
+        only for the queries that probe it (~n_q * p / n_shards each).
 
         ``mode``: "auto" picks by the footprint estimate below;
         "broadcast"/"scan" force a strategy — the same escape hatch Spark
@@ -266,9 +263,9 @@ class DiskANNIndex:
           index parquet; the query batch is collected + broadcast (the
           small side) in chunks of at most
           ``operators.search.SCAN_QUERY_COLLECT_CAP`` rows, and each
-          chunk's probed shards are packed into at most one Python task
-          per core, each searching its shards from the cache. Per batch,
-          only the top-k merge shuffles (O(q*k'*shards) rows) — corpus
+          chunk is cut into at most one query block per core; each task
+          searches its block against every shard it probes from the
+          cache — per-block final top-k, no merge shuffle, and corpus
           bytes never move. One-shot searches take this path too.
 
         Serving-loop note (broadcast mode): the query frame is
@@ -345,7 +342,8 @@ class DiskANNIndex:
         - scan (or auto over the threshold): run the routing job — the
           shards spread over at most one task per core, each task decodes
           its shards into the node-local mmap cache and returns their
-          routing points, so the first batch pays no decode.
+          routing points, so the first batch pays no decode (serving:
+          per-block final top-k, no merge shuffle).
         """
         m = self.meta
         if self._use_broadcast(mode):

@@ -35,7 +35,8 @@ BATCHES = [int(x) for x in (sys.argv[2] if len(sys.argv) > 2 else "2000,10000").
 BEAM = int(os.environ.get("RDS_BEAM", "512"))
 PROBES = os.environ.get("RDS_SHARD_PROBES", "auto")
 PROBES = PROBES if PROBES == "auto" else int(PROBES)
-# RDS_PROBE_MODE: "scan" (default — shard tasks, merge shuffle) or
+# RDS_PROBE_MODE: "scan" (default — query-block tasks over the mmap
+# cache, per-block final top-k, no merge shuffle) or
 # "broadcast" (query tasks, local finalize; over-budget file-backed
 # indexes ride the mmap shard map, so this is now legal at 5M)
 MODE = os.environ.get("RDS_PROBE_MODE", "scan")

@@ -277,9 +277,35 @@ def test_auto_mode_memory_aware_broadcast_gate(spark, tmp_path):
     idx_bc.close()
 
 
+def test_scan_search_plan_has_no_window_or_exchange(spark, emb, tmp_path,
+                                                   monkeypatch):
+    """Scan mode emits each query block's final top-k in its own task,
+    so its executed plan holds no Window merge and no Exchange, scan-all
+    and probed alike."""
+    from rust_diskann_spark import IndexParams, build_index
+
+    monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
+    vectors = emb.select(F.col("vec_id").alias("id"),
+                         F.col("embedding").alias("vec"))
+    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    idx = build_index(
+        vectors, str(tmp_path / "idx"),
+        params=IndexParams(max_degree=16, build_beam_width=32, num_shards=2,
+                           seed=3),
+    )
+    for probes in (None, "auto"):
+        plan = plan_of(idx.search_with_dists(
+            queries, k=3, beam_width=32, shard_probes=probes, mode="scan"))
+        assert "MapInPandas" in plan
+        assert "Window" not in plan and "Exchange" not in plan, plan
+    idx.close()
+
+
 def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypatch):
     """A query batch over the scan collect cap runs through the cached
-    scan in cap-sized chunks (one collect + broadcast each, one merge),
+    scan in cap-sized chunks (one collect + broadcast each, no merge),
     in auto and in explicit scan mode, with and without shard routing —
     row for row the same as broadcast mode. The name is kept so the test
     keeps its history; there is no cogroup fallback any more."""

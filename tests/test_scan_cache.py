@@ -274,9 +274,9 @@ def test_cached_scan_hamming_roundtrip(spark, tmp_path, monkeypatch):
 
 
 def test_pack_shards_lpt_plan():
-    """The scan-mode task plan: a deterministic LPT packing of the probed
-    shards into at most one bin per task."""
-    from rust_diskann_spark.operators.search import _pack_shards, _shard_loads
+    """The routing job's task plan: a deterministic LPT packing of the
+    shards with work into at most one bin per task."""
+    from rust_diskann_spark.operators.search import _pack_shards
 
     loads = {0: 7, 1: 3, 2: 0, 3: 9, 4: 1, 5: 3, 6: 5, 7: 0, 8: 2}
     probed = {s for s, w in loads.items() if w > 0}
@@ -294,28 +294,101 @@ def test_pack_shards_lpt_plan():
         total = sum(loads.values())
         assert max(bin_loads) <= total / len(plan) + max(loads.values())
 
-    # a zero-query batch runs zero tasks, probed or scan-all
-    assert _pack_shards(_shard_loads(None, 0, 8), 4) == []
+    # no work runs zero tasks
+    assert _pack_shards({s: 0 for s in range(8)}, 4) == []
     assert _pack_shards({}, 4) == []
-    # scan-all covers every shard with the whole batch
-    plan = _pack_shards(_shard_loads(None, 20, 8), 4)
+    # equal loads spread evenly
+    plan = _pack_shards({s: 20 for s in range(8)}, 4)
     assert sorted(s for b in plan for s in b) == list(range(8))
     assert [len(b) for b in plan] == [2, 2, 2, 2]
-    # probe rows: a shard nobody probes gets no task
-    pmap = {0: np.array([0, 3]), 1: np.array([], dtype=np.int64),
-            2: np.array([1])}
-    assert _shard_loads(pmap, 4, 3) == {0: 2, 1: 0, 2: 1}
-    assert _pack_shards(_shard_loads(pmap, 4, 3), 4) == [[0], [2]]
+    # a shard with no work gets no task
+    assert _pack_shards({0: 2, 1: 0, 2: 1}, 4) == [[0], [2]]
+
+
+def test_plan_blocks_equal_load_contiguous_blocks():
+    """The scan-mode task plan: a chunk's rows, stably ordered by home
+    shard, cut into at most n_tasks contiguous non-empty blocks of about
+    equal probe load."""
+    from rust_diskann_spark.operators.search import _plan_blocks
+
+    rng = np.random.default_rng(7)
+    n_rows = 37
+    home = rng.integers(0, 6, n_rows)
+    loads = rng.integers(1, 5, n_rows)
+    for n_tasks in (1, 2, 3, 4, 7, 36, 37, 50):
+        order, bounds = _plan_blocks(loads, home, n_tasks)
+        n = min(n_tasks, n_rows)
+        # every row exactly once, in nearest-shard order, stable within
+        # a shard
+        assert sorted(order.tolist()) == list(range(n_rows))
+        keys = list(zip(home[order].tolist(), order.tolist()))
+        assert keys == sorted(keys)
+        # at most n contiguous, non-empty blocks covering every row
+        assert 1 <= len(bounds) <= n
+        assert bounds[0][0] == 0 and bounds[-1][1] == n_rows
+        assert all(lo < hi for lo, hi in bounds)
+        assert all(a[1] == b[0] for a, b in zip(bounds, bounds[1:]))
+        # deterministic
+        again = _plan_blocks(loads, home, n_tasks)
+        assert np.array_equal(again[0], order) and again[1] == bounds
+        # no block over its share plus the largest single load
+        block_loads = [loads[order[lo:hi]].sum() for lo, hi in bounds]
+        assert max(block_loads) <= loads.sum() / n + loads.max()
+    # one heavy row takes a block of its own; no block is ever empty
+    _, bounds = _plan_blocks(np.array([10, 1, 1, 1]), np.zeros(4, int), 4)
+    assert bounds == [(0, 1), (1, 4)]
+
+    # scan-all keeps the chunk's order and cuts equal blocks
+    order, bounds = _plan_blocks(np.ones(20, np.int64), None, 4)
+    assert order.tolist() == list(range(20))
+    assert bounds == [(0, 5), (5, 10), (10, 15), (15, 20)]
+    order, bounds = _plan_blocks(np.ones(10, np.int64), None, 4)
+    sizes = [hi - lo for lo, hi in bounds]
+    assert len(bounds) == 4 and max(sizes) - min(sizes) <= 1
+    # fewer rows than tasks: one row per block
+    assert _plan_blocks(np.ones(3, np.int64), None, 4)[1] == [
+        (0, 1), (1, 2), (2, 3)]
+    # no rows, no blocks
+    assert _plan_blocks(np.ones(0, np.int64), None, 4)[1] == []
+    assert _plan_blocks(np.ones(0, np.int64), np.zeros(0, int), 4)[1] == []
+
+
+def _group_stages(sc, group):
+    """(tasks, shuffle bytes) of every stage the job group ran that
+    completed a task (skipped stages complete none)."""
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks:
+                data = store.lastStageAttempt(sid)
+                out.append((info.numTasks, data.shuffleWriteBytes()
+                            + data.shuffleReadBytes()))
+    return out
+
+
+def _scan_dispatch(sc, idx, q, group, probes):
+    """Rows of one scan-mode search, and the stages its collect ran.
+    The query collect and probe routing run while the plan is built;
+    only the dispatch runs inside the job group."""
+    res = idx.search_with_dists(q, k=5, beam_width=32, shard_probes=probes,
+                                mode="scan")
+    sc.setJobGroup(group, "scan dispatch width")
+    try:
+        got = _rows(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return got, _group_stages(sc, group)
 
 
 def test_scan_dispatch_width_is_min_cores_probed_shards(spark, tmp_path,
                                                        monkeypatch):
-    """With more shards than cores, a scan-mode batch runs its shard
-    searches in min(defaultParallelism, shards searched) Python tasks —
-    not one task per shard — and still matches broadcast mode bit for
-    bit."""
-    from rust_diskann_spark.operators import search as search_ops
-
+    """With more shards than cores, a scan-mode batch runs in
+    min(defaultParallelism, n_q) Python tasks, one query block each —
+    not one task per shard — in one stage with no merge behind it, and
+    still matches broadcast mode bit for bit."""
     monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
     path = str(tmp_path / "idx8")
     base = _corpus(spark, n=480)
@@ -325,42 +398,44 @@ def test_scan_dispatch_width_is_min_cores_probed_shards(spark, tmp_path,
                     seed=13, shard_by="kmeans"),
     )
     q = _queries(spark, base, every=24)
+    n_q = q.count()
     sc = spark.sparkContext
     cores = sc.defaultParallelism
     idx = open_index(spark, path)
     assert idx.meta.num_shards > cores
-    routing = idx._get_scan_routing()
-    q_pd = q.toPandas()
-    pmap = search_ops._probe_map_from_routing(
-        q_pd, routing, "l2", np.float32, 2
-    )
-    probed = sum(1 for rows in pmap.values() if len(rows))
+    for n, probes in enumerate((None, 2)):
+        got, stages = _scan_dispatch(sc, idx, q, f"scan-dispatch-{n}",
+                                     probes)
+        assert [t for t, _ in stages] == [min(cores, n_q)], (probes, stages)
+        want = _rows(idx.search_with_dists(
+            q, k=5, beam_width=32, shard_probes=probes, mode="broadcast"
+        ))
+        assert got == want
+    idx.close()
 
-    tracker = sc.statusTracker()
-    for n, (probes, searched) in enumerate(
-        ((None, idx.meta.num_shards), (2, probed))
-    ):
-        # the query collect and probe routing run while the plan is built;
-        # only the dispatch + merge run inside the job group
-        res = idx.search_with_dists(q, k=5, beam_width=32,
-                                    shard_probes=probes, mode="scan")
-        group = f"scan-dispatch-{n}"
-        sc.setJobGroup(group, "scan dispatch width")
-        try:
-            got = _rows(res)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        stages = [
-            tracker.getStageInfo(sid)
-            for jid in tracker.getJobIdsForGroup(group)
-            for sid in tracker.getJobInfo(jid).stageIds
-        ]
-        # the mapInPandas stage feeds every other stage of the merge, so
-        # it is the first one that ran (skipped stages complete no task)
-        dispatch = min((s for s in stages if s.numCompletedTasks),
-                       key=lambda s: s.stageId)
-        assert dispatch.numTasks == min(cores, searched), (
-            probes, searched, dispatch)
+
+def test_scan_fills_cores_with_fewer_shards(spark, tmp_path, monkeypatch):
+    """With fewer shards than cores, a scan-mode batch still runs one
+    query block per core: min(defaultParallelism, n_q) tasks in one
+    stage, with zero shuffle bytes, bit for bit equal to broadcast mode.
+    Shard bins could fill at most one task per shard."""
+    monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
+    path = str(tmp_path / "idx2")
+    base = _corpus(spark)
+    build_index(
+        base, path,
+        IndexParams(max_degree=8, build_beam_width=16, num_shards=2,
+                    seed=17, shard_by="kmeans"),
+    )
+    q = _queries(spark, base, every=40)
+    n_q = q.count()
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    assert n_q >= 8 and cores > 2
+    idx = open_index(spark, path)
+    for n, probes in enumerate((None, 1)):
+        got, stages = _scan_dispatch(sc, idx, q, f"scan-fill-{n}", probes)
+        assert stages == [(min(cores, n_q), 0)], (probes, stages)
         want = _rows(idx.search_with_dists(
             q, k=5, beam_width=32, shard_probes=probes, mode="broadcast"
         ))
@@ -412,9 +487,10 @@ def test_query_chunks_split_at_cap(spark, monkeypatch):
 
 def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
                                             monkeypatch):
-    """A scan task searching two shards writes one shard_task record per
-    shard, and each shard's window starts at its own cache lookup: the
-    second record's t0 is at or after the end of the first one's."""
+    """A scan task whose query block probes two shards writes one
+    shard_task record per shard, and each shard's window starts at its
+    own cache lookup: the second record's t0 is at or after the end of
+    the first one's. The task yields the block's final top-k."""
     import json
 
     import pandas as pd
@@ -433,14 +509,15 @@ def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
     })
 
     class _FakeBroadcast:
-        value = (q_pd, None, [[0, 1]])
+        value = (q_pd, {0: np.arange(4), 1: np.arange(4)}, [(0, 4)])
 
     run_task = search_ops._scan_task(
-        _FakeBroadcast(), root, token, idx_path, "l2", np.float32, 3, 16
+        _FakeBroadcast(), root, token, idx_path, "l2", np.float32, 3, 16, 4
     )
     frames = list(run_task(0))
-    assert len(frames) == 2
-    assert all(len(f) == 4 * 3 for f in frames)
+    assert len(frames) == 1
+    assert len(frames[0]) == 4 * 3
+    assert sorted(set(frames[0]["rank"])) == [1, 2, 3]
     recs = [
         json.loads(line)
         for f in sorted(prof.iterdir())
