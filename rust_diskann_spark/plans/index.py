@@ -232,7 +232,8 @@ class DiskANNIndex:
         shard_probes: int | str | None = None,
         mode: str = "auto",
     ) -> DataFrame:
-        """Reference A7 (lib.rs:635-693): (query_id, rank, id, dist).
+        """Reference A7 (lib.rs:635-693): (query_id, rank, id, dist), one
+        top-k per query ROW in either mode, so a repeated query_id gets two.
         ``shard_probes``: IVF-style shard routing — search only the p
         shards whose routing set (medoid + FPS entries) is nearest;
         None = all (exact shard-and-merge); ``'auto'`` adapts the probe

@@ -22,10 +22,16 @@ def _corpus(spark, n=400, dim=8, seed=3):
     )
 
 
-def _queries(spark, corpus, every=40):
-    return corpus.filter(F.col("id") % every == 0).select(
+def _queries(spark, corpus, every=40, repeat=False):
+    q = corpus.filter(F.col("id") % every == 0).select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")
     )
+    if repeat:  # query_id 0 once more, with row 1's vector
+        q = q.union(corpus.filter(F.col("id") == 1).select(
+            F.lit(0).cast("bigint").alias("query_id"),
+            F.col("vec").alias("qvec"),
+        ))
+    return q
 
 
 def _rows(df):
@@ -51,8 +57,9 @@ def idx_path(spark, tmp_path, monkeypatch):
 def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path):
     """Scan-all cached scan vs broadcast mode, bit for bit. Broadcast is
     the reference now that the JVM-persisted scan path is gone; the name
-    is kept so the test keeps its history."""
-    q = _queries(spark, _corpus(spark))
+    is kept so the test keeps its history. One query_id repeats with
+    another vector: both modes give each query row its own top-k."""
+    q = _queries(spark, _corpus(spark), repeat=True)
     idx = open_index(spark, idx_path)
     res_bc = _rows(idx.search_with_dists(q, k=5, beam_width=32,
                                          mode="broadcast"))
@@ -64,6 +71,7 @@ def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path):
         os.path.join(shard_cache.cache_root(), idx._cache_token)
     )
     assert res_cached == res_bc
+    assert sum(1 for r in res_cached if r[0] == 0) == 10
     idx.close()
 
 
@@ -86,8 +94,8 @@ def test_cached_probed_matches_legacy_probed(spark, idx_path):
     ``shard_probes``: both route on each shard's medoid + entry points,
     so they must probe the same shards and agree bit for bit. Broadcast
     is the reference now that the JVM-persisted scan path is gone; the
-    name is kept so the test keeps its history."""
-    q = _queries(spark, _corpus(spark))
+    name is kept so the test keeps its history. One query_id repeats."""
+    q = _queries(spark, _corpus(spark), repeat=True)
     idx = open_index(spark, idx_path)
     for probes in (2, "auto"):
         got_cached = _rows(idx.search_with_dists(
