@@ -760,10 +760,13 @@ def _native_l2_batch(
     # re-score in query BLOCKS: the whole-batch form materialized
     # (nq*beam, dim) f64 temporaries (~270 MB at 512 queries x beam 512
     # x 128-d) whose allocation/fault cost swung finalize time 0.8-4.0 s
-    # between identical runs (r8 split); ~64-query blocks keep temps in
-    # the tens of MB. Same einsum form and per-element math — reduction
-    # runs over j within each row, so chunking rows is bit-exact.
-    blk = max(1, (1 << 22) // max(beam * int(qmat.shape[1]), 1))
+    # between identical runs (r8 split). A block gathers at most 2^20
+    # elements (8 MB of f64 per temporary: 64 queries at beam 512 x
+    # 32-d): at 2^22, a 256-query block of that shape grew each worker's
+    # RSS by ~36 MB on its first batch. Same einsum form and per-element
+    # math — reduction runs over j within each row, so chunking rows is
+    # bit-exact (tests/test_vamana_core.py pins it).
+    blk = max(1, (1 << 20) // max(beam * int(qmat.shape[1]), 1))
     for lo in range(0, nq, blk):
         hi = min(lo + blk, nq)
         wi_b = wi[lo:hi]

@@ -1,23 +1,29 @@
 """Distributed ANN search (reference A7/A8/A10 + S1-S4).
 
-Two physical strategies, one per residency model — the broadcast-join
-vs shuffle-join choice applied to serving:
+One serving plan, two residency models — the broadcast-join vs
+shuffle-join choice applied to serving, reduced to where a task reads a
+shard from:
 
-1. :func:`broadcast_search` (index in executor memory): the whole index
-   is a broadcast variable (or its node-local mmap stand-in) and queries
-   run through one narrow ``mapInPandas``; each Arrow batch beam-searches
-   every shard it probes and finalizes its own global top-k. No shuffle.
-2. :func:`cached_scan_search` (index larger than broadcast memory): each
-   shard stays in the node-local mmap cache (operators/shard_cache.py)
-   and the query batch moves instead — collected to the driver in chunks
-   of at most ``SCAN_QUERY_COLLECT_CAP`` rows. Each chunk is routed once,
-   cut into at most one query block per core and broadcast with its
-   probe map; each task searches its block against every shard the block
-   probes and emits the block's final top-k (:func:`_topk_frame`) —
-   per-block final top-k, no merge shuffle.
+- broadcast residency (index in executor memory): the whole index is a
+  Spark broadcast variable and a task reads shard ``sid`` as
+  ``bc.value[sid]`` (:func:`_broadcast_accessor`);
+- mmap residency (index larger than broadcast memory): each shard stays
+  in the node-local mmap cache (operators/shard_cache.py) and a task
+  reads it through ``shard_cache.get_or_decode`` (:func:`_cache_accessor`).
+
+Either way :func:`serve_blocks` collects the query batch to the driver
+in chunks of at most ``SCAN_QUERY_COLLECT_CAP`` rows, validates and
+routes each chunk once, cuts it into at most one query block per core
+(:func:`_plan_blocks`) and broadcasts it with its probe map; each task
+(:func:`_scan_task`) searches its block against every shard the block
+probes and emits the block's final top-k (:func:`_topk_frame`) —
+per-block final top-k, no merge shuffle. The residency models differ
+only in the shard accessor and in where the routing points come from.
+:func:`broadcast_search` and :func:`cached_scan_search` are thin
+wrappers over that dispatch.
 
 Both are the reference's batch-parallel loop over a resident index
-(README.md:120-134); they differ only in where the index lives.
+(README.md:120-134): whole queries per thread, one block per core.
 """
 
 from __future__ import annotations
@@ -30,15 +36,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rust_diskann_spark.core import vamana
+from rust_diskann_spark.operators import shard_cache
 from rust_diskann_spark.params import IndexParams
 from rust_diskann_spark.prelude import (  # noqa: F401  (re-exported)
     _drop_nested_zip_finders,
     _task_prelude,
 )
+from rust_diskann_spark.sources import index_store
 
 RESULT_SCHEMA = "query_id BIGINT, rank INT, id BIGINT, dist DOUBLE"
 
-# cached_scan_search collects the query batch to the driver before
+# serve_blocks collects the query batch to the driver before
 # broadcasting it (the corpus side stays resident). The Python driver
 # holds at most this many query rows at a time: a larger batch streams
 # through the driver once and is searched chunk by chunk (_query_chunks),
@@ -84,11 +92,11 @@ def _auto_probe_tau() -> float:
     return _AUTO_PROBE_TAU
 
 
-# RDS_PROFILE_DIR: when set, every broadcast_search worker appends one
-# JSON line per Arrow batch to <dir>/search_profile_<pid>.jsonl with a
-# per-component time budget (stack/route/kernel/flat/merge/df + wall),
-# and every scan task one "shard_task" line per shard its query block
-# searched (decode/kernel/emit + wall).
+# RDS_PROFILE_DIR: when set, every serving task appends one "shard_task"
+# JSON line per shard its query block searched to
+# <dir>/search_profile_<pid>.jsonl (decode/kernel/emit + wall; "source"
+# names the shard accessor, "cache" or "broadcast"). One record schema
+# for both residency models.
 # The r7 verdict's measured ~2x full-path-vs-kernel gap at beam 512 is
 # Spark-mechanics overhead; this is the stopwatch that attributes it.
 # Timer reads always run (ns-scale next to ms-scale batches); file IO
@@ -272,8 +280,8 @@ def _topk_frame(parts: list, qids: np.ndarray, k: int) -> pd.DataFrame:
 
 
 def _query_chunks(queries: DataFrame):
-    """Yield a scan-mode query batch as ``(query_id, qvec)`` pandas
-    chunks of at most ``SCAN_QUERY_COLLECT_CAP`` rows.
+    """Yield a query batch as ``(query_id, qvec)`` pandas chunks of at
+    most ``SCAN_QUERY_COLLECT_CAP`` rows.
 
     A batch under the cap is one ``limit(cap+1)`` Arrow collect, yielded
     as a single chunk: its lineage runs exactly once. A larger batch
@@ -295,7 +303,8 @@ def _query_chunks(queries: DataFrame):
     def chunk(rows):
         return pd.DataFrame({
             "query_id": np.array([r[0] for r in rows], dtype=np.int64),
-            "qvec": [np.asarray(r[1]) for r in rows],
+            "qvec": [None if r[1] is None else np.asarray(r[1])
+                     for r in rows],
         })
 
     rows = []
@@ -308,16 +317,51 @@ def _query_chunks(queries: DataFrame):
         yield chunk(rows)
 
 
-def _route_chunk(
-    q_pd: pd.DataFrame, routing: dict, metric: str, dtype, shard_probes
-):
+def _query_matrix(q_pd: pd.DataFrame, dim: int | None, metric: str,
+                  dtype) -> np.ndarray:
+    """The ``(n_q, dim)`` query matrix of one collected chunk.
+
+    Raises ``ValueError`` naming the first offending ``query_id`` for a
+    null vector, ragged rows, a dimension other than the index's ``dim``
+    (None skips that check) or, for float metrics, a NaN/inf element
+    (one would poison the kernel's (dist, id) ordering)."""
+    qids = q_pd["query_id"].to_numpy()
+    vecs = q_pd["qvec"].to_numpy()
+    lens = np.fromiter((-1 if v is None else len(v) for v in vecs),
+                       np.int64, count=len(vecs))
+
+    def fail(bad: np.ndarray, what: str):
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"query_id {int(qids[i])}: {what} (reference lib.rs:636-641)"
+        )
+
+    if (lens < 0).any():
+        fail(lens < 0, "null query vector")
+    if len(lens) == 0:
+        return np.empty((0, dim or 0), dtype=dtype)
+    ragged = lens != lens[0]
+    if ragged.any():
+        fail(ragged, f"ragged query vectors: dim {lens[ragged][0]}, "
+                     f"first row dim {lens[0]}")
+    if dim is not None and lens[0] != dim:
+        fail(lens != dim, f"query dimension mismatch: index dim {dim}, "
+                          f"query dim {lens[0]}")
+    qmat = _stack_rows(q_pd["qvec"], dtype)
+    if metric != "hamming":
+        finite = np.isfinite(qmat).all(axis=1)
+        if not finite.all():
+            fail(~finite, "non-finite (NaN/inf) query vector element")
+    return qmat
+
+
+def _route_chunk(qmat: np.ndarray, routing: dict, metric: str, shard_probes):
     """``(home, probe mask, shard ids)`` for a query chunk, or None for
     scan-all: ``home`` is each query's nearest shard (a column index into
     the sorted shard ids), the mask is :func:`_probe_mask`'s."""
     sids = sorted(routing)
     if not isinstance(shard_probes, str) and shard_probes >= len(sids):
         return None
-    qmat = _stack_rows(q_pd["qvec"], dtype)
     pts = [routing[s] for s in sids]
     starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
     dmat = _route_dists_from_points(metric, qmat, pts, starts)
@@ -336,9 +380,9 @@ def _probe_map_from_routing(
     q_pd: pd.DataFrame, routing: dict, metric: str, dtype, shard_probes
 ) -> dict[int, np.ndarray] | None:
     """{shard: row positions of the queries probing it} from a routing
-    dict, or None for scan-all — the driver-side half of probed scan
-    search."""
-    routed = _route_chunk(q_pd, routing, metric, dtype, shard_probes)
+    dict, or None for scan-all — the driver-side half of probed search."""
+    routed = _route_chunk(_stack_rows(q_pd["qvec"], dtype), routing, metric,
+                          shard_probes)
     return None if routed is None else _probe_map(routed[1], routed[2])
 
 
@@ -405,18 +449,45 @@ def _map_packed(spark, n_tasks: int, run_task, schema: str) -> DataFrame:
     return spark.range(0, n_tasks, 1, n_tasks).mapInPandas(run, schema)
 
 
-def cached_scan_routing(
-    spark, num_shards: int, index_path: str, token: str, root: str,
-    metric: str,
-) -> dict[int, np.ndarray]:
-    """{shard: routing-point matrix} via one job whose shards are spread
-    over at most ``defaultParallelism`` tasks. Each task resolves its
-    shards through the mmap cache (populating it on first touch — this
-    job doubles as the cache warm) and emits only the medoid + FPS entry
-    vectors; O(shards x entry_set) rows reach the driver, independent of
-    corpus size."""
-    from rust_diskann_spark.operators import shard_cache
+def _routing_points(tup) -> np.ndarray:
+    """One shard's routing points: the rows of its medoid and FPS entry
+    set, in ascending local order."""
+    gids, mat, graph, medoid_local, sqn, ent, *_rest = tup
+    ids = {int(medoid_local)}
+    if ent is not None:
+        ids.update(int(e) for e in ent)
+    return np.asarray(mat[np.array(sorted(ids), dtype=np.int64)])
 
+
+def _cache_accessor(root: str, token: str, index_path: str, metric: str):
+    """Shard accessor of mmap residency: one ``get_or_decode`` per shard
+    (:data:`shard_cache.EMPTY` for an empty shard)."""
+
+    def cache(sid: int):
+        return shard_cache.get_or_decode(root, token, sid, index_path,
+                                         metric)
+
+    return cache
+
+
+def _broadcast_accessor(bc):
+    """Shard accessor of broadcast residency: ``bc.value[sid]`` (None
+    for a shard the materialized dict omits because it is empty). A
+    worker unpickles the broadcast once, at its first lookup."""
+
+    def broadcast(sid: int):
+        return bc.value.get(sid)
+
+    return broadcast
+
+
+def _routing_job(spark, num_shards: int, get_shard, metric: str
+                 ) -> dict[int, np.ndarray]:
+    """{shard: routing-point matrix} via one job whose shards are spread
+    over at most ``defaultParallelism`` tasks, each reading its shards
+    through ``get_shard`` and emitting only their routing points;
+    O(shards x entry_set) rows reach the driver, independent of corpus
+    size."""
     # f32 round-trips through DOUBLE exactly; hamming words must stay
     # integral (a float64 trip zeroes low bits of words >= 2^53 — r3)
     elem_sql = "BIGINT" if metric == "hamming" else "DOUBLE"
@@ -428,16 +499,10 @@ def cached_scan_routing(
 
     def emit_routing(t: int):
         for sid in plan[t]:
-            tup = shard_cache.get_or_decode(
-                root, token, sid, index_path, metric
-            )
-            if tup is shard_cache.EMPTY:
+            tup = get_shard(sid)
+            if not tup:
                 continue
-            gids, mat, graph, medoid_local, sqn, ent, quant = tup
-            ids = [int(medoid_local)]
-            if ent is not None:
-                ids.extend(int(e) for e in ent)
-            pts = np.asarray(mat[np.array(sorted(set(ids)), dtype=np.int64)])
+            pts = _routing_points(tup)
             yield pd.DataFrame(
                 {"shard": np.full(len(pts), sid, dtype=np.int32),
                  "vec": list(pts)}
@@ -452,21 +517,33 @@ def cached_scan_routing(
     return out
 
 
-def _scan_task(bc, root: str, token: str, index_path: str, metric: str,
-               dtype, k: int, beam_width: int, num_shards: int):
-    """Body of one scan-mode Python task for one query chunk: ``bc``
-    holds the chunk's ``(queries, probe map, block bounds)`` and
-    ``run_task(t)`` beam-searches block ``t`` against every shard it
-    probes, one shard after another from the node-local mmap cache, then
-    yields the block's final top-k (:func:`_topk_frame`)."""
+def cached_scan_routing(
+    spark, num_shards: int, index_path: str, token: str, root: str,
+    metric: str,
+) -> dict[int, np.ndarray]:
+    """:func:`_routing_job` over the mmap cache: each task resolves its
+    shards through the cache, populating it on first touch, so this job
+    doubles as the cache warm."""
+    return _routing_job(
+        spark, num_shards, _cache_accessor(root, token, index_path, metric),
+        metric,
+    )
+
+
+def _scan_task(bc, get_shard, metric: str, k: int, beam_width: int,
+               num_shards: int):
+    """Body of one serving Python task for one query chunk: ``bc`` holds
+    the chunk's ``(query ids, query matrix, probe map, block bounds)``
+    and ``run_task(t)`` beam-searches block ``t`` against every shard it
+    probes, one shard after another through ``get_shard``, then yields
+    the block's final top-k (:func:`_topk_frame`)."""
 
     def run_task(t: int):
-        from rust_diskann_spark.operators import shard_cache
         from time import perf_counter as _pc
 
-        q_all, pmap, bounds = bc.value
+        qids, q_all, pmap, bounds = bc.value
         lo, hi = bounds[t]
-        qmat = _stack_rows(q_all["qvec"].iloc[lo:hi], dtype)
+        qmat = q_all[lo:hi]
         parts = []
         for sid in range(num_shards) if pmap is None else pmap:
             rows = np.arange(hi - lo)
@@ -476,15 +553,12 @@ def _scan_task(bc, root: str, token: str, index_path: str, metric: str,
                 rows = r[np.searchsorted(r, lo):np.searchsorted(r, hi)] - lo
                 if len(rows) == 0:
                     continue
-            # each shard's profile window starts at its own cache lookup,
-            # so a task's earlier shards never count as a later one's
-            # decode
+            # each shard's profile window starts at its own lookup, so a
+            # task's earlier shards never count as a later one's decode
             _t0 = _pc()
-            tup = shard_cache.get_or_decode(
-                root, token, sid, index_path, metric
-            )
-            if tup is shard_cache.EMPTY:
-                continue
+            tup = get_shard(sid)
+            if not tup:  # an empty shard: EMPTY from the cache, None from
+                continue  # the broadcast dict
             gids, mat, graph, medoid_local, sqn, ent, quant = tup
             if qmat.shape[1] != mat.shape[1]:
                 raise ValueError(
@@ -503,7 +577,8 @@ def _scan_task(bc, root: str, token: str, index_path: str, metric: str,
                 _profile_emit(
                     {
                         "path": "shard_task",
-                        "source": "cache",
+                        # the accessor's name: "cache" or "broadcast"
+                        "source": get_shard.__name__,
                         "t0": _t0,
                         "n_rows": int(len(gids)),
                         "n_q": int(len(rows)),
@@ -513,10 +588,72 @@ def _scan_task(bc, root: str, token: str, index_path: str, metric: str,
                         "wall": round(_pc() - _t0, 6),
                     }
                 )
-        qids = q_all["query_id"].to_numpy().astype(np.int64, copy=False)
         yield _topk_frame(parts, qids[lo:hi], k)
 
     return run_task
+
+
+def serve_blocks(
+    queries: DataFrame,
+    get_shard,
+    params: IndexParams,
+    dim: int | None,
+    k: int,
+    beam_width: int = 64,
+    shard_probes: int | str | None = None,
+    routing=None,
+) -> DataFrame:
+    """The one serving dispatch, for both residency models.
+
+    The query batch is collected in chunks of at most
+    ``SCAN_QUERY_COLLECT_CAP`` rows (:func:`_query_chunks`) and each
+    chunk is validated once on the driver (:func:`_query_matrix`, against
+    the index's ``dim``). Under ``shard_probes`` the driver routes the
+    chunk once and orders it by each query's nearest shard. It then cuts
+    the chunk into at most ``min(defaultParallelism, n_q)`` query blocks
+    of equal probe load (:func:`_plan_blocks`), broadcast with the probe
+    map. Each Python task searches its block against every shard the
+    block probes, read through ``get_shard`` (:func:`_cache_accessor` or
+    :func:`_broadcast_accessor`), and emits the block's final top-k —
+    the reference's batch loop, whole queries per thread
+    (README.md:120-134). Per-block final top-k, no shuffle: each query
+    lives in one block of one chunk, so chunks are just unioned.
+
+    ``routing`` is a ``{shard: routing points}`` dict or a zero-arg
+    callable returning one (the index handle's memoized routing job). It
+    is resolved once, at the first non-empty probed chunk, so an empty
+    batch never runs the routing job."""
+    spark = queries.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    metric = params.metric
+    dtype = np.int64 if metric == "hamming" else np.float32
+    parts = []
+    for q_pd in _query_chunks(queries):
+        qids = q_pd["query_id"].to_numpy().astype(np.int64, copy=False)
+        qmat = _query_matrix(q_pd, dim, metric, dtype)
+        # probed routing (IVF-style) prunes WORK, not residency: a block
+        # opens only the shards its rows probe
+        routed = None
+        if shard_probes is not None and len(qids):
+            if callable(routing):
+                routing = routing()
+            routed = _route_chunk(qmat, routing, metric, shard_probes)
+        probe_map = None
+        if routed is None:
+            _, bounds = _plan_blocks(np.ones(len(qids), np.int64), None, par)
+        else:
+            home, pmask, sids = routed
+            order, bounds = _plan_blocks(pmask.sum(axis=1), home, par)
+            qids, qmat = qids[order], qmat[order]
+            probe_map = _probe_map(pmask[order], sids)
+        bc = spark.sparkContext.broadcast((qids, qmat, probe_map, bounds))
+        parts.append(_map_packed(
+            spark, len(bounds),
+            _scan_task(bc, get_shard, metric, k, beam_width,
+                       params.num_shards),
+            RESULT_SCHEMA,
+        ))
+    return reduce(DataFrame.union, parts)
 
 
 def cached_scan_search(
@@ -530,72 +667,38 @@ def cached_scan_search(
     shard_probes: int | str | None = None,
     routing=None,
 ) -> DataFrame:
-    """Search for indexes LARGER than executor broadcast memory: the
-    corpus stays put, the query batch moves.
-
-    The dual of :func:`broadcast_search` with the roles flipped — Spark's
-    broadcast-join side choice applied to serving. Residency is the
-    node-local mmap shard cache (operators/shard_cache.py). The query
-    batch is collected in chunks of at most ``SCAN_QUERY_COLLECT_CAP``
-    rows (:func:`_query_chunks`). The driver routes each chunk once and
-    cuts it into at most ``min(defaultParallelism, n_q)`` query blocks
-    (:func:`_plan_blocks`), broadcast (the small side) with the probe
-    map. Each Python task searches its block against every shard the
-    block probes, from the cache, and emits the block's final top-k —
-    the reference's batch loop, whole queries per thread
-    (README.md:120-134). Per-block final top-k, no merge shuffle: each
-    query lives in one block of one chunk, so chunks are just unioned.
+    """Search for indexes LARGER than executor broadcast memory:
+    :func:`serve_blocks` reading shards from the node-local mmap shard
+    cache (operators/shard_cache.py); the corpus stays put, the query
+    batch moves.
 
     Corpus bytes cross the JVM->Python boundary zero times in steady
     state (re-decoding every shard every batch cost 28.5% of 5M
     shard-task wall). A cache miss self-heals executor-side from the
     index parquet via partition pruning, which also makes this correct
-    on a multi-node cluster with per-node caches.
+    on a multi-node cluster with per-node caches. ``routing`` defaults
+    to :func:`cached_scan_routing`, run only for a probed batch with
+    rows."""
+    if routing is None:
+        spark = queries.sparkSession
 
-    ``routing`` may be a dict or a zero-arg callable (the index handle's
-    memoized routing job). It is resolved once, at the first non-empty
-    chunk, so an empty batch never runs the routing job."""
-    spark = queries.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    parts = []
-    for q_pd in _query_chunks(queries):
-        # probed routing (IVF-style, as in broadcast mode) prunes WORK,
-        # not residency: a block opens only the shards its rows probe
-        routed = None
-        if shard_probes is not None and len(q_pd):
-            if callable(routing):
-                routing = routing()
-            if routing is None:
-                routing = cached_scan_routing(
-                    spark, params.num_shards, index_path, token, root,
-                    metric,
-                )
-            routed = _route_chunk(q_pd, routing, metric, dtype, shard_probes)
-        probe_map = None
-        if routed is None:
-            _, bounds = _plan_blocks(np.ones(len(q_pd), np.int64), None, par)
-        else:
-            home, pmask, sids = routed
-            order, bounds = _plan_blocks(pmask.sum(axis=1), home, par)
-            q_pd = q_pd.iloc[order].reset_index(drop=True)
-            probe_map = _probe_map(pmask[order], sids)
-        bc = spark.sparkContext.broadcast((q_pd, probe_map, bounds))
-        parts.append(_map_packed(
-            spark, len(bounds),
-            _scan_task(bc, root, token, index_path, metric, dtype, k,
-                       beam_width, params.num_shards),
-            RESULT_SCHEMA,
-        ))
-    return reduce(DataFrame.union, parts)
+        def routing():
+            return cached_scan_routing(spark, params.num_shards, index_path,
+                                       token, root, params.metric)
+
+    return serve_blocks(
+        queries, _cache_accessor(root, token, index_path, params.metric),
+        params, index_store.read_metadata(index_path).dim, k, beam_width,
+        shard_probes, routing,
+    )
 
 
 def materialize_shards(
     index_vectors: DataFrame, index_graph: DataFrame, params: IndexParams
 ) -> dict[int, tuple]:
-    """Collect the index into the driver-side numpy form broadcast_search
-    ships to executors: {shard: (gids, mat, graph, medoid_local, sqnorms)}.
+    """Collect the index into the driver-side numpy form broadcast
+    residency ships to executors: {shard: (gids, mat, graph,
+    medoid_local, sqnorms, entries, quant)}, empty shards omitted.
 
     Separated from :func:`broadcast_search` so an index handle can
     materialize ONCE and reuse the broadcast across every subsequent
@@ -737,25 +840,18 @@ def _shard_route_dists(metric, qmat: np.ndarray, shard_list) -> np.ndarray:
     ``np.minimum.reduceat`` does the reduction without a Python loop.
     For l2 the squared distance is used (monotonic — routing only
     compares)."""
-    pts, seg_starts = [], []
-    n_pts = 0
-    for gids, mat, graph, medoid_local, sqn, ent, *_rest in shard_list:
-        ids = [medoid_local]
-        if ent is not None:
-            ids.extend(int(e) for e in ent)
-        seg_starts.append(n_pts)
-        pts.append(mat[np.array(sorted(set(ids)), dtype=np.int64)])
-        n_pts += len(pts[-1])
+    pts = [_routing_points(t) for t in shard_list]
+    seg_starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
     return _route_dists_from_points(metric, qmat, pts, seg_starts)
 
 
 def _route_dists_from_points(
     metric, qmat: np.ndarray, pts: list, seg_starts: list
 ) -> np.ndarray:
-    """Metric core of :func:`_shard_route_dists`, shared with the scan
-    path (which sources its routing points from the mmap shard cache
-    rather than a broadcast shard list): ``pts`` is a per-shard list of
-    routing-point matrices, reduced segment-min over the concatenation."""
+    """Metric core of :func:`_shard_route_dists`, shared with the
+    serving dispatch (which holds routing points, not shard tuples):
+    ``pts`` is a per-shard list of routing-point matrices, reduced
+    segment-min over the concatenation."""
     if metric == "hamming":
         # packed words stay in INTEGER dtype end-to-end: a float64 round
         # trip has a 53-bit mantissa and silently zeroes the low ~11 bits
@@ -802,18 +898,13 @@ def broadcast_search(
     shard_probes: int | str | None = None,
     shards_bc=None,
 ) -> DataFrame:
-    """ZERO-shuffle search for indexes that fit executor memory.
-
-    The dual of :func:`cached_scan_search`, mirroring Spark's
-    broadcast-join vs shuffle-join choice: the whole index (all shards'
-    vectors + graphs) is a Spark broadcast variable, or the node-local
-    mmap shard map standing in for one; queries run through one narrow
-    ``mapInPandas`` where each Arrow batch beam-searches every shard and
-    finalizes its own global top-k — no shuffle of the corpus and no
-    merge exchange. This is the regime the reference actually benchmarks
-    (a SIFT1M index resident in RAM, queried by a parallel batch —
-    README.md:120-134); use :func:`cached_scan_search` when the index
-    exceeds the broadcast budget.
+    """ZERO-shuffle search for indexes that fit executor memory:
+    :func:`serve_blocks` reading shards from a Spark broadcast of the
+    whole index (:func:`materialize_shards` output). This is the regime
+    the reference actually benchmarks (a SIFT1M index resident in RAM,
+    queried by a parallel batch — README.md:120-134); use
+    :func:`cached_scan_search` when the index exceeds the broadcast
+    budget.
 
     ``shard_probes``: search only the p nearest shards (IVF-style
     routing over the Vamana shards). ``None`` scans every shard — the
@@ -821,115 +912,34 @@ def broadcast_search(
     recall for a proportional QPS gain, the knob that matters when
     num_shards is large. ``'auto'`` derives the probe set per query from
     the routing geometry (:func:`_probe_mask`) — use it when the shard
-    count is high and the pieces-per-cluster factor is unknown. A shard's distance is the MIN over its routing
-    points — medoid plus the FPS-sampled entry set — not the medoid
-    alone: a single medoid misroutes queries near overlap-cell
-    boundaries (r2 measured probed4 recall 0.7586 routing on medoids;
-    the entry sets cover each shard's extent by construction).
+    count is high and the pieces-per-cluster factor is unknown. A
+    shard's distance is the MIN over its routing points — medoid plus
+    the FPS-sampled entry set — not the medoid alone: a single medoid
+    misroutes queries near overlap-cell boundaries (r2 measured probed4
+    recall 0.7586 routing on medoids; the entry sets cover each shard's
+    extent by construction).
 
     ``shards_bc``: a prebuilt broadcast of :func:`materialize_shards`
-    output — pass it to amortize index materialization across calls
-    (DiskANNIndex does this); None collects + broadcasts here.
+    output. None materializes and broadcasts here, taking the routing
+    points and ``dim`` from the driver-side dict; with a prebuilt
+    broadcast a probed batch routes through :func:`_routing_job` (the
+    driver never reads ``.value``, which would re-unpickle the whole
+    index). DiskANNIndex calls :func:`serve_blocks` itself, with the
+    routing points it kept when it broadcast.
     """
     spark = queries.sparkSession
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
+    dim = routing = None
+    if shards_bc is None:
+        shards = materialize_shards(index_vectors, index_graph, params)
+        routing = {s: _routing_points(t) for s, t in shards.items()}
+        dim = next((t[1].shape[1] for t in shards.values()), None)
+        shards_bc = spark.sparkContext.broadcast(shards)
+    get_shard = _broadcast_accessor(shards_bc)
+    if routing is None:
 
-    bc = shards_bc
-    if bc is None:
-        bc = spark.sparkContext.broadcast(
-            materialize_shards(index_vectors, index_graph, params)
-        )
+        def routing():
+            return _routing_job(spark, params.num_shards, get_shard,
+                                params.metric)
 
-    def run(batches):
-        _task_prelude()
-        from time import perf_counter as _pc
-
-        local = bc.value
-        for q_pdf in batches:
-            if len(q_pdf) == 0:
-                continue
-            _t0 = _pc()
-            qmat = _stack_rows(q_pdf["qvec"], dtype)
-            qids = q_pdf["query_id"].to_numpy().astype(np.int64, copy=False)
-            _t_stack = _pc()
-            shard_list = list(local.values())
-            if shard_list and qmat.shape[1] != shard_list[0][1].shape[1]:
-                raise ValueError(
-                    f"query dimension mismatch: index dim "
-                    f"{shard_list[0][1].shape[1]}, query dim {qmat.shape[1]} "
-                    f"(reference lib.rs:636-641)"
-                )
-            # per-query shard routing (IVF-style, fixed p or 'auto') or
-            # scan-all
-            pmask = None
-            if shard_probes is not None and (
-                isinstance(shard_probes, str)
-                or shard_probes < len(shard_list)
-            ):
-                dmat = _shard_route_dists(metric, qmat, shard_list)
-                pmask = _probe_mask(dmat, shard_probes)
-            _t_route = _pc()
-            # per-shard results accumulate as flat arrays; the global
-            # per-query top-k is one _topk_frame merge
-            t_kernel = t_flat = 0.0
-            parts = []
-            for s_idx, (
-                gids, mat, graph, medoid_local, sqn, ent, *rest
-            ) in enumerate(shard_list):
-                if pmask is None:
-                    sel = np.arange(len(qmat))
-                else:
-                    sel = np.nonzero(pmask[:, s_idx])[0]
-                    if len(sel) == 0:
-                        continue
-                _tk = _pc()
-                results = vamana.beam_search_batch(
-                    mat, graph, metric, medoid_local, qmat[sel],
-                    k, beam_width, sqnorms=sqn, entries=ent,
-                    quant=rest[0] if rest else None,
-                )
-                t_kernel += _pc() - _tk
-                _tf = _pc()
-                r_lens, flat_i, flat_d = _results_flat(results, gids)
-                parts.append((np.repeat(sel, r_lens), flat_i, flat_d))
-                t_flat += _pc() - _tf
-            _t_shards = _pc()
-            # "merge" times all of _topk_frame, frame build included
-            out = _topk_frame(parts, qids, k)
-            _t_merge = _pc()
-            if _PROFILE_DIR:
-                _profile_emit(
-                    {
-                        "t0": _t0,
-                        "n_q": int(len(qmat)),
-                        "n_shards": len(shard_list),
-                        "stack": round(_t_stack - _t0, 6),
-                        "route": round(_t_route - _t_stack, 6),
-                        "kernel": round(t_kernel, 6),
-                        "flat": round(t_flat, 6),
-                        "merge": round(_t_merge - _t_shards, 6),
-                        "df": round(_pc() - _t_merge, 6),
-                        "wall": round(_pc() - _t0, 6),
-                    }
-                )
-            yield out
-
-    q = queries.select(
-        F.col("query_id").cast("long").alias("query_id"), F.col("qvec")
-    )
-    # fan the (tiny) query side out to the whole cluster — a round-robin
-    # exchange of queries only; the corpus itself still never shuffles.
-    # 3x the core count, not 1x: per-query beam cost varies, and
-    # one-task-per-core partitioning turns that variance into a
-    # stage-tail straggler (1M event-log measured: median task 0.63 s vs
-    # max 0.82 s per steady batch; 3x finer partitions recovered ~20%
-    # steady QPS). Pre-partitioned query frames (>= par partitions, the
-    # serving-loop pattern) are left untouched — no per-batch exchange.
-    # Each of the 3x partitions is one Python task and pays the fixed
-    # per-task cost _map_packed's docstring gives: ~0.10-0.13 CPU-s on
-    # 4 vCPUs, a fraction of its cost when 3x was chosen at 1M.
-    par = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < par:
-        q = q.repartition(3 * par)
-    return q.mapInPandas(run, RESULT_SCHEMA)
+    return serve_blocks(queries, get_shard, params, dim, k, beam_width,
+                        shard_probes, routing)

@@ -1,4 +1,4 @@
-"""Node-local mmap shard cache — the scan path's residency layer.
+"""Node-local mmap shard cache — the mmap residency of the serving plan.
 
 The reference serves queries from a single memory-mapped index file
 (lib.rs:450-496: open maps the file once, every search reads pages the
@@ -230,14 +230,14 @@ def get_or_decode(root: str, token: str, sid: int, index_path: str,
     RELOAD and prefer the mmap-backed tuple. Returns :data:`EMPTY` for
     empty shards.
 
-    The reload matters because callers memoize what this returns
-    (:func:`load_shard_map`): serving the in-memory decode on a miss
-    would permanently pin one full decoded copy PER Python worker that
-    raced the first touch — the exact per-worker memory multiplier the
-    mmap cache exists to remove (r8 ADVICE, the r7 51 GB broadcast OOM
-    pattern). The in-memory copy is kept only when the reload still
-    misses (save failed, e.g. disk full) — then the cache degrades to
-    per-batch re-decode, never to wrong results."""
+    The reload matters because the in-memory decode is a private copy
+    in each Python worker that raced the first touch, while the mmap
+    tuple is page cache shared by every worker on the node — the
+    per-worker memory multiplier the mmap cache exists to remove (r8
+    ADVICE, the r7 51 GB broadcast OOM pattern). The in-memory copy is
+    kept only when the reload still misses (save failed, e.g. disk
+    full) — then the cache degrades to per-batch re-decode, never to
+    wrong results."""
     tup = load_shard(root, token, sid)
     if tup is not None:
         return tup
@@ -283,65 +283,3 @@ def record_source(root: str, token: str, index_path: str) -> None:
 def drop_index_cache(root: str, token: str) -> None:
     """Remove one index's cache tree (``DiskANNIndex.close()``)."""
     shutil.rmtree(os.path.join(root, token), ignore_errors=True)
-
-
-# per-process memo of assembled {shard: tuple} maps, keyed by token: the
-# mmap handles are tiny, and re-assembling 100s of shards per task would
-# pay the meta.json/np.load open cost every batch. Tokens are
-# content-derived, so a memoized map can never serve a different index's
-# data; mmaps of since-deleted cache files stay valid on POSIX (the inode
-# lives until unmapped), so a concurrent close() cannot corrupt reads.
-_SHARD_MAP_MEMO: dict[str, dict] = {}
-
-
-def load_shard_map(
-    root: str, token: str, index_path: str, metric: str, shard_ids
-) -> dict:
-    """{shard: decoded tuple} over the whole index, mmap-backed and
-    memoized per process. Empty shards are omitted (matching
-    ``materialize_shards``)."""
-    m = _SHARD_MAP_MEMO.get(token)
-    if m is None:
-        m = {}
-        for s in shard_ids:
-            tup = get_or_decode(root, token, int(s), index_path, metric)
-            if tup is not EMPTY:
-                m[int(s)] = tup
-        _SHARD_MAP_MEMO[token] = m
-    return m
-
-
-class MmapShardSource:
-    """Stand-in for the materialized-shards Spark broadcast whose
-    ``.value`` assembles the {shard: tuple} map from the node-local mmap
-    cache instead of unpickling a per-worker copy.
-
-    This removes broadcast mode's real memory multiplier — every reused
-    Python worker unpickling its own full-index copy (~workers x index
-    bytes, the reason a 5M index OOM-killed the host at 51 GB RSS in r7)
-    — and replaces it with ONE page-cache copy per node shared by every
-    worker. The object is a few strings, so shipping it inside task
-    closures is free; ``unpersist``/``destroy`` are no-ops so the index
-    handle's lifecycle code treats it exactly like a broadcast handle
-    (the disk footprint is released by ``drop_index_cache``)."""
-
-    def __init__(self, root: str, token: str, index_path: str, metric: str,
-                 num_shards: int):
-        self.root = root
-        self.token = token
-        self.index_path = index_path
-        self.metric = metric
-        self.num_shards = num_shards
-
-    @property
-    def value(self) -> dict:
-        return load_shard_map(
-            self.root, self.token, self.index_path, self.metric,
-            range(self.num_shards),
-        )
-
-    def unpersist(self, blocking: bool = False) -> None:
-        pass
-
-    def destroy(self) -> None:
-        pass

@@ -121,49 +121,50 @@ class DiskANNIndex:
     # mmap shard cache (operators/shard_cache.py), whose misses self-heal
     # from this directory's parquet — the DiskANN-style disk-resident path
     path: str
-    # lazily-built broadcast of the materialized shards (broadcast search
-    # mode) — built once, reused by every query batch; sound because an
-    # index is immutable once built (reference has no insert-after-build,
+    # lazily-built broadcast of the materialized shards (broadcast
+    # residency) — built once, reused by every query batch; sound because
+    # an index is immutable once built (reference has no insert-after-build,
     # SURVEY §2.5)
     _shards_bc: object = None
-    # lazily-collected {shard: routing-point matrix} for probed scan
-    # search — O(shards x entry_set) driver memory, one tiny job ever
+    # {shard: routing-point matrix} taken from the materialized shards on
+    # the driver before they were broadcast (the driver never reads
+    # _shards_bc.value: that would re-unpickle the whole index)
+    _bc_routing: object = None
+    # lazily-collected {shard: routing-point matrix} for probed search
+    # over the mmap cache — O(shards x entry_set) driver memory, one tiny
+    # job ever
     _scan_routing: object = None
     # the index's content-derived mmap shard cache token
     _cache_token: str | None = None
 
     def _broadcast_shards(self):
-        if self._shards_bc is None:
-            if not self._fits_broadcast() and not self._broadcast_feasible():
-                # explicit broadcast mode on an INFEASIBLY large index:
-                # serve the shard map from the node-local mmap cache
-                # instead of a real broadcast — one page-cache copy per
-                # node rather than one unpickled copy PER WORKER (the r7
-                # 5M attempt OOM-killed the JVM at 51 GB RSS exactly this
-                # way). Populate the cache with
-                # the distributed routing job first (each shard decoded
-                # by one task) so the first query batch doesn't have 32
-                # workers racing to decode the same shards.
-                #
-                # Feasible-but-over-auto-budget indexes take the REAL
-                # broadcast: per-worker copies are anonymous memory
-                # (transparent huge pages), the mmap is 4 KiB file-backed
-                # page-cache — measured 1.45-1.6x apart on the 1M index
-                # (12,435 vs 7,733 q/s beam 128; 8,574 vs ~3k beam 512,
-                # gated slices, scale_runs_r9/1m_resid_real.log). An
-                # explicit mode="broadcast" is the caller asking for
-                # residency; only true infeasibility should downgrade it.
-                self._get_scan_routing()
-                self._shards_bc = shard_cache.MmapShardSource(
-                    shard_cache.cache_root(), self._get_cache_token(),
-                    self.path, self.meta.metric, self.meta.num_shards,
-                )
-            else:
-                self._shards_bc = self.spark.sparkContext.broadcast(
-                    search_ops.materialize_shards(
-                        self.vectors, self.graph, self.params
-                    )
-                )
+        """The real shard broadcast, built once per handle, or None when
+        broadcast residency is infeasible; the caller then serves from
+        the node-local mmap cache through the same dispatch and block
+        plan, only with the cache's shard accessor.
+
+        Infeasible means an explicit ``mode="broadcast"`` on an index
+        whose per-worker copies would not fit (:meth:`_broadcast_feasible`):
+        the cache keeps one page-cache copy per node rather than one
+        unpickled copy PER WORKER (the r7 5M attempt OOM-killed the JVM
+        at 51 GB RSS exactly this way). Feasible-but-over-auto-budget
+        indexes take the REAL broadcast: per-worker copies are anonymous
+        memory (transparent huge pages), the mmap is 4 KiB file-backed
+        page-cache — measured 1.45-1.6x apart on the 1M index (12,435 vs
+        7,733 q/s beam 128; 8,574 vs ~3k beam 512, gated slices,
+        scale_runs_r9/1m_resid_real.log). An explicit mode="broadcast" is
+        the caller asking for residency; only true infeasibility should
+        downgrade it."""
+        if self._shards_bc is None and (
+            self._fits_broadcast() or self._broadcast_feasible()
+        ):
+            shards = search_ops.materialize_shards(
+                self.vectors, self.graph, self.params
+            )
+            self._bc_routing = {
+                s: search_ops._routing_points(t) for s, t in shards.items()
+            }
+            self._shards_bc = self.spark.sparkContext.broadcast(shards)
         return self._shards_bc
 
     def _get_scan_routing(self):
@@ -243,58 +244,55 @@ class DiskANNIndex:
         operators/search.py _probe_mask). Either mode searches a shard
         only for the queries that probe it (~n_q * p / n_shards each).
 
-        ``mode``: "auto" picks by the footprint estimate below;
-        "broadcast"/"scan" force a strategy — the same escape hatch Spark
+        ``mode``: "auto" picks the residency by the footprint estimate
+        below; "broadcast"/"scan" force one — the same escape hatch Spark
         gives joins (the broadcast() hint) for when the caller knows
         executor memory better than the static threshold does.
 
-        Physical strategy (the broadcast-join vs shuffle-join analogy):
+        One serving plan, two residency models (the broadcast-join vs
+        shuffle-join analogy): the query batch is collected to the driver
+        when this is called, in chunks of at most
+        ``operators.search.SCAN_QUERY_COLLECT_CAP`` rows. Each chunk is
+        validated once (a null, ragged, wrong-dimension or non-finite
+        query vector raises ``ValueError`` naming its ``query_id``),
+        routed once, and cut into at most one query block per core; each
+        task searches its block against every shard it probes and emits
+        the block's final top-k — per-block final top-k, zero shuffles
+        (:func:`operators.search.serve_blocks`). The residency decides
+        only where a task reads a shard from:
 
-        - **broadcast mode** when the estimated index footprint
+        - **broadcast** when the estimated index footprint
           ``n * (elem_size*dim + 4*max_degree)`` fits the memory-aware
           byte budget (:func:`auto_broadcast_budget` — executor memory /
           (4 x cores), capped at ``BROADCAST_INDEX_THRESHOLD``, conf
-          override ``spark.rust_diskann.broadcastIndexThreshold``):
-          the whole index ships as a
-          broadcast variable and search is ONE narrow mapInPandas over
-          queries — zero shuffles (the reference's own regime: a
-          RAM-resident index, parallel query batch, README.md:120-134).
-        - **scan mode** otherwise (the 100 TB path): each shard lives in
-          the node-local mmap shard cache, decoded once per node from the
-          index parquet; the query batch is collected + broadcast (the
-          small side) in chunks of at most
-          ``operators.search.SCAN_QUERY_COLLECT_CAP`` rows, and each
-          chunk is cut into at most one query block per core; each task
-          searches its block against every shard it probes from the
-          cache — per-block final top-k, no merge shuffle, and corpus
-          bytes never move. One-shot searches take this path too.
-
-        Serving-loop note (broadcast mode): the query frame is
-        repartitioned to ``defaultParallelism`` only when it has fewer
-        partitions, so a loop issuing many batches should pre-partition +
-        persist its query source ONCE — ideally to 2-4x the core count:
-        per-query beam cost varies, and one-task-per-core partitioning
-        turns that variance into a stage-tail straggler (measured at 1M:
-        median task 0.63 s vs max 0.82 s per batch; 3x finer partitions
-        recovered ~20% steady QPS).
+          override ``spark.rust_diskann.broadcastIndexThreshold``): the
+          whole index ships once per handle as a broadcast variable (the
+          reference's own regime: a RAM-resident index, parallel query
+          batch, README.md:120-134).
+        - **scan** otherwise (the 100 TB path): each shard lives in the
+          node-local mmap shard cache, decoded once per node from the
+          index parquet, so corpus bytes never move. An explicit
+          ``mode="broadcast"`` on an index too large for per-worker
+          copies serves this way too (:meth:`_broadcast_shards`).
         """
-        if self._use_broadcast(mode):
-            return search_ops.broadcast_search(
-                queries, self.vectors, self.graph, self.params, k, beam_width,
-                shard_probes=shard_probes, shards_bc=self._broadcast_shards(),
+        bc = self._broadcast_shards() if self._use_broadcast(mode) else None
+        if bc is None:
+            # residency is the node-local mmap shard cache, so no corpus
+            # bytes ever shuffle or persist in the JVM
+            # (operators/shard_cache.py). Pass the routing BUILDER: it
+            # runs at most once per handle, and only for a probed batch
+            # with rows
+            get_shard = search_ops._cache_accessor(
+                shard_cache.cache_root(), self._get_cache_token(), self.path,
+                self.meta.metric,
             )
-        # residency is the node-local mmap shard cache, so no corpus
-        # bytes ever shuffle or persist in the JVM
-        # (operators/shard_cache.py). Pass the routing BUILDER: it runs
-        # at most once per handle, and only for a batch with rows
-        return search_ops.cached_scan_search(
-            queries, self.path,
-            self._get_cache_token(), shard_cache.cache_root(),
-            self.params, k, beam_width,
-            shard_probes=shard_probes,
-            routing=self._get_scan_routing
-            if shard_probes is not None
-            else None,
+            routing = self._get_scan_routing
+        else:
+            get_shard = search_ops._broadcast_accessor(bc)
+            routing = self._bc_routing
+        return search_ops.serve_blocks(
+            queries, get_shard, self.params, self.meta.dim, k, beam_width,
+            shard_probes=shard_probes, routing=routing,
         )
 
     def _use_broadcast(self, mode: str) -> bool:
@@ -327,11 +325,11 @@ class DiskANNIndex:
     def warm(self, mode: str = "auto") -> "DiskANNIndex":
         """Pin the index in executor memory — the analog of the reference's
         mmap page-cache warm-up (README.md:37). What gets pinned follows
-        the mode, because each physical strategy touches different state:
+        the residency ``mode`` resolves to:
 
-        - broadcast (or auto under the threshold): pre-materialize the
-          shard broadcast AND run one untimed probe batch (one trivial
-          query per core) so every reused python worker unpickles the
+        - broadcast: build the shard broadcast AND run one untimed probe
+          batch (one trivial query per core) through the serving
+          dispatch, so every reused python worker unpickles the
           broadcast NOW — measured 3.7x first-batch throughput otherwise
           lost to worker-side index load (the reference likewise
           excludes open/mmap from its QPS). The lazy ``vectors``/
@@ -340,25 +338,22 @@ class DiskANNIndex:
           just to feed the one-time Arrow collect cost the old warm a
           full extra scan of the index (r4: warm 487 s -> the collect
           itself is seconds once the join/persist work is gone).
-        - scan (or auto over the threshold): run the routing job — the
-          shards spread over at most one task per core, each task decodes
-          its shards into the node-local mmap cache and returns their
-          routing points, so the first batch pays no decode (serving:
-          per-block final top-k, no merge shuffle).
+        - mmap cache (scan, or an infeasible explicit broadcast): run the
+          routing job — the shards spread over at most one task per
+          core, each task decodes its shards into the node-local mmap
+          cache and returns their routing points, so the first batch
+          pays no decode.
         """
         m = self.meta
-        if self._use_broadcast(mode):
-            self._broadcast_shards()
+        if self._use_broadcast(mode) and self._broadcast_shards() is not None:
             par = self.spark.sparkContext.defaultParallelism
             elem_sql = "bigint" if m.elem_type == "long" else "float"
             probe = self.spark.range(par).select(
                 F.col("id").alias("query_id"),
                 F.array_repeat(F.lit(0).cast(elem_sql), m.dim).alias("qvec"),
             )
-            search_ops.broadcast_search(
-                probe, self.vectors, self.graph, self.params, k=1,
-                beam_width=1, shards_bc=self._shards_bc,
-            ).count()
+            self.search_with_dists(probe, k=1, beam_width=1,
+                                   mode=mode).count()
         else:
             # the routing job decodes every shard through get_or_decode,
             # so one pass populates the whole node-local cache AND yields
@@ -373,7 +368,7 @@ class DiskANNIndex:
         accumulates cache trees/broadcasts until executor storage fills.
         The handle stays usable after close(): the lazy caches rebuild on
         next use."""
-        self._scan_routing = None
+        self._scan_routing = self._bc_routing = None
         if self._cache_token is not None:
             # executor nodes hold their own /<cache_root>/<token> trees
             # (populated by the routing warm and by self-heal decodes);
@@ -490,8 +485,8 @@ def build_index(
         if params.shard_by == "kmeans":
             # the straggler cap-split may have produced MORE units than
             # requested (dense 0..n_units-1); metadata must record the
-            # actual count or every search's shard range (the scan plan,
-            # the routing job, the mmap shard map) would silently skip
+            # actual count or every search's shard range (the serving
+            # plan, the routing job) would silently skip
             # the extras. The count comes from the cap-split's own dense
             # numbering (driver-side) — the former max("shard") aggregate
             # re-ran the whole assignment lineage, one extra full corpus

@@ -35,10 +35,11 @@ BATCHES = [int(x) for x in (sys.argv[2] if len(sys.argv) > 2 else "2000,10000").
 BEAM = int(os.environ.get("RDS_BEAM", "512"))
 PROBES = os.environ.get("RDS_SHARD_PROBES", "auto")
 PROBES = PROBES if PROBES == "auto" else int(PROBES)
-# RDS_PROBE_MODE: "scan" (default — query-block tasks over the mmap
-# cache, per-block final top-k, no merge shuffle) or
-# "broadcast" (query tasks, local finalize; over-budget file-backed
-# indexes ride the mmap shard map, so this is now legal at 5M)
+# RDS_PROBE_MODE: "scan" (default) or "broadcast". Both run one
+# dispatch — query-block tasks, per-block final top-k, no shuffle — and
+# differ only in the shard accessor: the node-local mmap cache, or a
+# real broadcast. An index too large for per-worker copies (5M) serves
+# an explicit "broadcast" from the mmap cache, i.e. exactly as "scan".
 MODE = os.environ.get("RDS_PROBE_MODE", "scan")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 WINDOWS = int(os.environ.get("RDS_STEADY_WINDOWS", "2"))
@@ -71,7 +72,7 @@ def main() -> None:
 
     # RDS_BCAST_BUDGET: override the broadcast-index byte budget (e.g.
     # "16g" to force a REAL per-worker broadcast, "1m" to force the
-    # over-budget mmap shard map) — the residency A/B knob for comparing
+    # mmap cache) — the residency A/B knob for comparing
     # per-worker unpickled copies vs one page-cache copy per node.
     if os.environ.get("RDS_BCAST_BUDGET"):
         from rust_diskann_spark.plans.index import BROADCAST_THRESHOLD_CONF

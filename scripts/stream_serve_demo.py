@@ -36,7 +36,7 @@ SECONDS = int(sys.argv[2]) if len(sys.argv) > 2 else 90
 RATE = int(os.environ.get("RDS_STREAM_RATE", "4000"))
 BEAM = int(os.environ.get("RDS_BEAM", "128"))
 # shard routing for multi-shard indexes (e.g. the 5M/408 disk index,
-# served via the mmap shard map once it exceeds the broadcast budget):
+# served from the mmap cache once it exceeds the broadcast budget):
 # int p, 'auto', or unset = scan-all (right for the 1M merged index's
 # single shard)
 PROBES = os.environ.get("RDS_STREAM_PROBES") or None

@@ -205,5 +205,6 @@ def test_every_task_body_starts_with_the_prelude():
             found += 1
     assert bad == []
     # the serving, build, dedup, ivf, multimodal, source, streaming and
-    # close() task bodies; a drop means the scan above stopped seeing them
-    assert found >= 23
+    # close() task bodies (both residency models share one serving body,
+    # _map_packed's); a drop means the scan above stopped seeing them
+    assert found >= 22

@@ -7,6 +7,7 @@ import shutil
 
 import numpy as np
 import pytest
+from pyspark import Broadcast
 from pyspark.sql import functions as F
 
 from rust_diskann_spark import IndexParams, build_index, open_index
@@ -147,25 +148,27 @@ def test_warm_scan_populates_cache_and_close_drops_it(spark, idx_path):
 
 def test_over_budget_broadcast_rides_mmap_source(spark, idx_path):
     """Explicit broadcast mode on an over-budget file-backed index must
-    serve from the mmap shard map (one page-cache copy per node) instead
-    of a real per-worker broadcast, with identical rows."""
+    serve from the node-local mmap cache (one page-cache copy per node)
+    through the same dispatch instead of a real per-worker broadcast,
+    with identical rows. The name is kept so the test keeps its history;
+    the mmap shard map it was named for is gone."""
     from rust_diskann_spark.plans import index as plans_index
 
     q = _queries(spark, _corpus(spark))
     idx_ref = open_index(spark, idx_path)
     expected = _rows(idx_ref.search_with_dists(q, k=5, beam_width=32,
                                                mode="broadcast"))
-    assert not isinstance(idx_ref._shards_bc, shard_cache.MmapShardSource)
+    assert isinstance(idx_ref._shards_bc, Broadcast)
     idx_ref.close()
 
     # probed expectation from a REAL broadcast handle with the same
-    # shard_probes: a routing regression specific to the mmap shard map
+    # shard_probes: a routing regression specific to mmap residency
     # that preserved cardinality would pass a rows-count check (r8 ADVICE)
     idx_ref = open_index(spark, idx_path)
     expected_auto = _rows(idx_ref.search_with_dists(
         q, k=5, beam_width=32, shard_probes="auto", mode="broadcast"
     ))
-    assert not isinstance(idx_ref._shards_bc, shard_cache.MmapShardSource)
+    assert isinstance(idx_ref._shards_bc, Broadcast)
     idx_ref.close()
 
     spark.conf.set(plans_index.BROADCAST_THRESHOLD_CONF, "1k")
@@ -176,7 +179,11 @@ def test_over_budget_broadcast_rides_mmap_source(spark, idx_path):
                 q, k=5, beam_width=32, shard_probes=probes, mode="broadcast"
             ))
             assert got == want
-        assert isinstance(idx._shards_bc, shard_cache.MmapShardSource)
+        # no real broadcast: served from this index's live mmap cache
+        assert idx._shards_bc is None
+        assert os.path.isdir(
+            os.path.join(shard_cache.cache_root(), idx._cache_token)
+        )
         idx.close()
         assert idx._shards_bc is None
     finally:
@@ -186,7 +193,7 @@ def test_over_budget_broadcast_rides_mmap_source(spark, idx_path):
 def test_feasible_over_budget_broadcast_stays_real(spark, idx_path,
                                                    monkeypatch):
     """Explicit broadcast mode past the AUTO budget but within memory
-    feasibility must use a REAL broadcast, not the mmap shard map: the
+    feasibility must use a REAL broadcast, not the mmap cache: the
     per-worker anonymous copies run 1.45-1.6x the 4 KiB file-backed mmap
     on gather-bound search (r9, scale_runs_r9/1m_resid_real.log). Only
     true infeasibility (workers x bytes vs executor memory) or an
@@ -201,15 +208,15 @@ def test_feasible_over_budget_broadcast_stays_real(spark, idx_path,
     rows = _rows(idx.search_with_dists(q, k=5, beam_width=32,
                                        mode="broadcast"))
     assert len(rows) > 0
-    assert not isinstance(idx._shards_bc, shard_cache.MmapShardSource)
+    assert isinstance(idx._shards_bc, Broadcast)
     idx.close()
 
 
 def test_cold_get_or_decode_returns_mmap(spark, idx_path):
     """A cache MISS must populate and then serve the mmap-backed tuple,
-    not the in-memory decode: load_shard_map memoizes whatever this
-    returns, and an in-memory copy would be pinned per worker process —
-    the multiplier the cache exists to remove (r8 ADVICE, medium)."""
+    not the in-memory decode: an in-memory copy is private to each
+    worker process — the multiplier the cache exists to remove (r8
+    ADVICE, medium)."""
     idx = open_index(spark, idx_path)
     token = idx._get_cache_token()
     root = shard_cache.cache_root()
@@ -377,12 +384,12 @@ def _group_stages(sc, group):
     return out
 
 
-def _scan_dispatch(sc, idx, q, group, probes):
-    """Rows of one scan-mode search, and the stages its collect ran.
-    The query collect and probe routing run while the plan is built;
-    only the dispatch runs inside the job group."""
+def _scan_dispatch(sc, idx, q, group, probes, mode="scan"):
+    """Rows of one search, and the stages its collect ran. The query
+    collect and probe routing run while the plan is built; only the
+    dispatch runs inside the job group."""
     res = idx.search_with_dists(q, k=5, beam_width=32, shard_probes=probes,
-                                mode="scan")
+                                mode=mode)
     sc.setJobGroup(group, "scan dispatch width")
     try:
         got = _rows(res)
@@ -451,6 +458,84 @@ def test_scan_fills_cores_with_fewer_shards(spark, tmp_path, monkeypatch):
     idx.close()
 
 
+def test_broadcast_dispatch_is_query_blocks(spark, tmp_path, monkeypatch):
+    """Broadcast residency runs the scan dispatch: a batch is
+    min(defaultParallelism, n_q) query blocks in one stage with zero
+    shuffle bytes (no round-robin query exchange), bit for bit equal to
+    scan mode, scan-all and probed."""
+    monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
+    path = str(tmp_path / "idxb")
+    base = _corpus(spark)
+    build_index(
+        base, path,
+        IndexParams(max_degree=8, build_beam_width=16, num_shards=2,
+                    seed=19, shard_by="kmeans"),
+    )
+    # one input partition, like a batch read from one small file: the
+    # block count follows the cores, not the query frame's partitions
+    q = _queries(spark, base, every=40).coalesce(1)
+    n_q = q.count()
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    assert n_q >= 8 and cores > 2
+    idx = open_index(spark, path)
+    for n, probes in enumerate((None, 1)):
+        got, stages = _scan_dispatch(sc, idx, q, f"bc-blocks-{n}", probes,
+                                     mode="broadcast")
+        assert stages == [(min(cores, n_q), 0)], (probes, stages)
+        assert isinstance(idx._shards_bc, Broadcast)
+        want = _rows(idx.search_with_dists(
+            q, k=5, beam_width=32, shard_probes=probes, mode="scan"
+        ))
+        assert got == want
+    idx.close()
+
+
+def _bad_queries(spark, case):
+    """A 3-query batch whose query_id 7 row is bad in the named way; for
+    ``"dim"`` every row has the wrong dimension, so the whole batch is
+    consistent and query_id 3 is the first offender."""
+    good = [0.5] * (9 if case == "dim" else 8)
+    bad = {
+        "null": None,
+        "ragged": [0.5] * 7,
+        "dim": good,
+        "nan": [0.5] * 7 + [float("nan")],
+        "inf": [float("-inf")] + [0.5] * 7,
+    }[case]
+    return spark.createDataFrame(
+        [(3, good), (7, bad), (9, good)], "query_id long, qvec array<float>"
+    )
+
+
+@pytest.mark.parametrize("mode", ["broadcast", "scan"])
+def test_bad_query_vectors_rejected_on_driver(spark, idx_path, mode):
+    """A null, ragged, wrong-dimension or NaN/inf query vector raises a
+    ValueError naming its query_id, on the driver, before routing, in
+    either residency — also under shard_probes, where a wrong dimension
+    used to surface as a numpy matmul error."""
+    idx = open_index(spark, idx_path)
+    want = {
+        "null": "query_id 7: null query vector",
+        "ragged": "query_id 7: ragged query vectors",
+        "dim": "query_id 3: query dimension mismatch: index dim 8, "
+               "query dim 9",
+        "nan": "query_id 7: non-finite",
+        "inf": "query_id 7: non-finite",
+    }
+    for case, msg in want.items():
+        for probes in (None, "auto"):
+            with pytest.raises(ValueError, match=msg):
+                idx.search_with_dists(_bad_queries(spark, case), k=3,
+                                      beam_width=16, shard_probes=probes,
+                                      mode=mode)
+    # the same batch without its bad row searches normally
+    ok = _bad_queries(spark, "nan").filter(F.col("query_id") != 7)
+    assert len(_rows(idx.search_with_dists(ok, k=3, beam_width=16,
+                                           mode=mode))) == 6
+    idx.close()
+
+
 def test_query_chunks_split_at_cap(spark, monkeypatch):
     """_query_chunks cuts an oversized batch into cap-sized chunks, each
     query exactly once; a batch under the cap is one chunk from one
@@ -501,8 +586,6 @@ def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
     the first one's. The task yields the block's final top-k."""
     import json
 
-    import pandas as pd
-
     from rust_diskann_spark.operators import search as search_ops
 
     prof = tmp_path / "prof"
@@ -511,16 +594,16 @@ def test_scan_task_profile_window_per_shard(spark, idx_path, tmp_path,
     token = shard_cache.index_token(idx_path)
     root = shard_cache.cache_root()
     rng = np.random.default_rng(5)
-    q_pd = pd.DataFrame({
-        "query_id": np.arange(4, dtype=np.int64),
-        "qvec": list(rng.standard_normal((4, 8)).astype(np.float32)),
-    })
+    qmat = rng.standard_normal((4, 8)).astype(np.float32)
 
     class _FakeBroadcast:
-        value = (q_pd, {0: np.arange(4), 1: np.arange(4)}, [(0, 4)])
+        value = (np.arange(4, dtype=np.int64), qmat,
+                 {0: np.arange(4), 1: np.arange(4)}, [(0, 4)])
 
     run_task = search_ops._scan_task(
-        _FakeBroadcast(), root, token, idx_path, "l2", np.float32, 3, 16, 4
+        _FakeBroadcast(),
+        search_ops._cache_accessor(root, token, idx_path, "l2"),
+        "l2", 3, 16, 4,
     )
     frames = list(run_task(0))
     assert len(frames) == 1

@@ -694,3 +694,36 @@ def test_int8_view_rides_decode_above_threshold():
     assert _maybe_quant("cosine", mat).normalized
     # below threshold: untouched f32 path
     assert _maybe_quant("l2", mat[: n - 1]) is None
+
+
+def test_native_rescore_blocks_never_change_rows():
+    """The native kernel's f64 re-score runs in query blocks of at most
+    2^20 gathered elements (64 queries at beam 512 x 32-d). A 300-query
+    call spans several blocks; each query's ids and f64 dists must equal
+    a one-query call's bit for bit, so block size can never change
+    rows. Covers the f32, int8-traversal and raw-cosine paths."""
+    from rust_diskann_spark.core import native
+
+    if native.get_lib() is None:
+        pytest.skip("no C compiler on host")
+    rng = np.random.default_rng(17)
+    n, dim, beam = vamana.NATIVE_MIN_ROWS + 4, 32, 512
+    mat = rng.standard_normal((n, dim)).astype(np.float32)
+    p = IndexParams(max_degree=12, build_beam_width=24)
+    g, med = vamana.build_vamana(mat, p, seed=9)
+    sqn = vamana.sq_norms(mat)
+    qs = rng.standard_normal((300, dim)).astype(np.float32)
+    assert (1 << 20) // (beam * dim) < len(qs)  # the call spans blocks
+    for metric, quant in (("l2", None), ("l2", vamana.quantize_corpus(mat)),
+                          ("cosine", None)):
+        batch = vamana.beam_search_batch(mat, g, metric, med, qs, 10, beam,
+                                         sqnorms=sqn, quant=quant)
+        assert len(batch) == len(qs)
+        for i in range(len(qs)):
+            ids, ds = vamana.beam_search_batch(
+                mat, g, metric, med, qs[i:i + 1], 10, beam, sqnorms=sqn,
+                quant=quant,
+            )[0]
+            assert np.array_equal(batch[i][0], ids), (metric, i)
+            assert np.array_equal(batch[i][1], ds), (metric, i)
+            assert batch[i][1].dtype == np.float64
