@@ -331,8 +331,11 @@ def build_graph(vectors: DataFrame, params: IndexParams) -> DataFrame:
     # buckets empty and packs 2-4 units into others, and a task that
     # builds several large cells serially becomes the stage straggler
     # (observed at 1M x 64 cells: one task ran ~20 min past the rest).
-    # 16x buckets make collisions rare; AQE coalesces the empties
-    # size-aware, so two big cells are never re-merged into one task.
+    # 16x buckets make collisions rare, but the empties are NOT
+    # coalesced: AQE leaves a repartition with an explicit partition
+    # count alone, so every empty bucket still runs a Python task (248
+    # of 256 graph tasks read no rows on a 2,400-row, 8-shard kmeans
+    # build). ROADMAP direction 7 plans the shards on the driver instead.
     n_buckets = max(256, 16 * params.num_shards)
     return (
         vectors.repartition(n_buckets, "shard")

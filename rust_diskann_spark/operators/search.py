@@ -18,12 +18,14 @@ routes each chunk once, cuts it into at most one query block per core
 (:func:`_scan_task`) searches its block against every shard the block
 probes and emits the block's final top-k (:func:`_topk_frame`) —
 per-block final top-k, no merge shuffle. The residency models differ
-only in the shard accessor and in where the routing points come from.
-:func:`broadcast_search` and :func:`cached_scan_search` are thin
-wrappers over that dispatch.
+only in the shard accessor and in where the routing points come from;
+both decode a shard the same way, straight from the index parquet
+(``shard_cache.decode_shard_from_parquet`` over :func:`_decode_shard`).
 
 Both are the reference's batch-parallel loop over a resident index
 (README.md:120-134): whole queries per thread, one block per core.
+``plans.index.DiskANNIndex`` picks the residency and calls
+:func:`serve_blocks`.
 """
 
 from __future__ import annotations
@@ -38,11 +40,7 @@ from pyspark.sql import functions as F
 from rust_diskann_spark.core import vamana
 from rust_diskann_spark.operators import shard_cache
 from rust_diskann_spark.params import IndexParams
-from rust_diskann_spark.prelude import (  # noqa: F401  (re-exported)
-    _drop_nested_zip_finders,
-    _task_prelude,
-)
-from rust_diskann_spark.sources import index_store
+from rust_diskann_spark.prelude import _task_prelude
 
 RESULT_SCHEMA = "query_id BIGINT, rank INT, id BIGINT, dist DOUBLE"
 
@@ -362,9 +360,8 @@ def _route_chunk(qmat: np.ndarray, routing: dict, metric: str, shard_probes):
     sids = sorted(routing)
     if not isinstance(shard_probes, str) and shard_probes >= len(sids):
         return None
-    pts = [routing[s] for s in sids]
-    starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
-    dmat = _route_dists_from_points(metric, qmat, pts, starts)
+    dmat = _route_dists_from_points(metric, qmat,
+                                    [routing[s] for s in sids])
     pmask = _probe_mask(dmat, shard_probes)
     if pmask is None:
         return None
@@ -472,7 +469,7 @@ def _cache_accessor(root: str, token: str, index_path: str, metric: str):
 
 def _broadcast_accessor(bc):
     """Shard accessor of broadcast residency: ``bc.value[sid]`` (None
-    for a shard the materialized dict omits because it is empty). A
+    for a shard the broadcast dict omits because it is empty). A
     worker unpickles the broadcast once, at its first lookup."""
 
     def broadcast(sid: int):
@@ -515,19 +512,6 @@ def _routing_job(spark, num_shards: int, get_shard, metric: str
     for sid, grp in rows.groupby("shard"):
         out[int(sid)] = _stack_rows(grp["vec"], dtype)
     return out
-
-
-def cached_scan_routing(
-    spark, num_shards: int, index_path: str, token: str, root: str,
-    metric: str,
-) -> dict[int, np.ndarray]:
-    """:func:`_routing_job` over the mmap cache: each task resolves its
-    shards through the cache, populating it on first touch, so this job
-    doubles as the cache warm."""
-    return _routing_job(
-        spark, num_shards, _cache_accessor(root, token, index_path, metric),
-        metric,
-    )
 
 
 def _scan_task(bc, get_shard, metric: str, k: int, beam_width: int,
@@ -656,127 +640,11 @@ def serve_blocks(
     return reduce(DataFrame.union, parts)
 
 
-def cached_scan_search(
-    queries: DataFrame,
-    index_path: str,
-    token: str,
-    root: str,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    routing=None,
-) -> DataFrame:
-    """Search for indexes LARGER than executor broadcast memory:
-    :func:`serve_blocks` reading shards from the node-local mmap shard
-    cache (operators/shard_cache.py); the corpus stays put, the query
-    batch moves.
-
-    Corpus bytes cross the JVM->Python boundary zero times in steady
-    state (re-decoding every shard every batch cost 28.5% of 5M
-    shard-task wall). A cache miss self-heals executor-side from the
-    index parquet via partition pruning, which also makes this correct
-    on a multi-node cluster with per-node caches. ``routing`` defaults
-    to :func:`cached_scan_routing`, run only for a probed batch with
-    rows."""
-    if routing is None:
-        spark = queries.sparkSession
-
-        def routing():
-            return cached_scan_routing(spark, params.num_shards, index_path,
-                                       token, root, params.metric)
-
-    return serve_blocks(
-        queries, _cache_accessor(root, token, index_path, params.metric),
-        params, index_store.read_metadata(index_path).dim, k, beam_width,
-        shard_probes, routing,
-    )
-
-
-def materialize_shards(
-    index_vectors: DataFrame, index_graph: DataFrame, params: IndexParams
-) -> dict[int, tuple]:
-    """Collect the index into the driver-side numpy form broadcast
-    residency ships to executors: {shard: (gids, mat, graph,
-    medoid_local, sqnorms, entries, quant)}, empty shards omitted.
-
-    Separated from :func:`broadcast_search` so an index handle can
-    materialize ONCE and reuse the broadcast across every subsequent
-    query batch — the Spark analog of the reference's open-once/mmap
-    residency (lib.rs:450-496): queries after the first pay zero index
-    load cost.
-    """
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    graph_cols = ["id", "neighbors", "medoid"]
-    has_entries = "entries" in index_graph.columns  # pre-r1 indexes lack it
-    if has_entries:
-        graph_cols.append("entries")
-    # one Arrow collect PER SHARD AND PER TABLE (partition-pruned,
-    # scan-only jobs), decoded with vectorized numpy and aligned by id on
-    # the driver. NOT a (vectors ⋈ graph) join + collect: the join is a
-    # full shuffle of the index bytes just to zip two tables that are
-    # about to be re-sorted by id anyway (r4 measured the join-based warm
-    # at 487 s on the 1.3 GiB 1M index; the r3 judge saw 213 s on the
-    # older per-row decode — the shuffle, not the decode, dominates).
-    # Driver peak memory stays bounded at one shard's Arrow tables +
-    # numpy views (r3 verdict item #7).
-    # per-shard pruned collects assume a FILE-backed plan (parquet scans
-    # prune on the shard partition column). On an in-memory/derived frame
-    # each filter would re-execute the full lineage once per shard per
-    # table — O(num_shards) full scans (r4 ADVICE) — so fall back to ONE
-    # collect per table and split driver-side with pyarrow.
-    try:
-        file_backed = bool(index_vectors.inputFiles()) and bool(
-            index_graph.inputFiles()
-        )
-    except Exception:
-        file_backed = False
-    shards: dict[int, tuple] = {}
-    if file_backed:
-        shard_ids = sorted(
-            int(r["shard"])
-            for r in index_vectors.select("shard").distinct().collect()
-        )
-        for s in shard_ids:
-            vtbl = (
-                index_vectors.filter(F.col("shard") == s)
-                .select("id", "vec")
-                .toArrow()
-            )
-            gtbl = (
-                index_graph.filter(F.col("shard") == s)
-                .select(*graph_cols)
-                .toArrow()
-            )
-            tup = _decode_shard(vtbl, gtbl, s, metric, dtype, has_entries)
-            if tup is not None:
-                shards[s] = tup
-    else:
-        import pyarrow.compute as pc
-
-        vtbl_all = index_vectors.select("shard", "id", "vec").toArrow()
-        gtbl_all = index_graph.select("shard", *graph_cols).toArrow()
-        shard_ids = sorted(
-            pc.unique(vtbl_all.column("shard")).to_pylist()
-        )
-        for s in shard_ids:
-            vtbl = vtbl_all.filter(
-                pc.equal(vtbl_all.column("shard"), s)
-            ).select(["id", "vec"])
-            gtbl = gtbl_all.filter(
-                pc.equal(gtbl_all.column("shard"), s)
-            ).select(graph_cols)
-            tup = _decode_shard(vtbl, gtbl, int(s), metric, dtype, has_entries)
-            if tup is not None:
-                shards[int(s)] = tup
-    return shards
-
-
 def _decode_shard(vtbl, gtbl, s: int, metric: str, dtype, has_entries: bool):
     """Vectorized numpy decode of one shard's Arrow tables into the
-    broadcast tuple (gids, mat, graph, medoid_local, sqnorms, entries,
-    quant); None for an empty shard."""
+    shard tuple both residency models serve (gids, mat, graph,
+    medoid_local, sqnorms, entries, quant); None for an empty shard.
+    ``shard_cache.decode_shard_from_parquet`` is its one caller."""
     n = vtbl.num_rows
     if n == 0:
         return None
@@ -832,26 +700,17 @@ def _decode_shard(vtbl, gtbl, s: int, metric: str, dtype, has_entries: bool):
     )
 
 
-def _shard_route_dists(metric, qmat: np.ndarray, shard_list) -> np.ndarray:
+def _route_dists_from_points(metric, qmat: np.ndarray, pts: list
+                             ) -> np.ndarray:
     """(n_q, n_shards) routing distances for probed search: per shard the
-    MIN over its routing points (medoid + FPS entry set). Vectorized as
-    one (n_q, n_points) distance matrix segment-min-reduced per shard —
-    points are concatenated per-shard-contiguous so
+    MIN over its routing points (:func:`_routing_points`: medoid + FPS
+    entry set), ``pts`` holding one routing-point matrix per shard.
+    Vectorized as one (n_q, n_points) distance matrix segment-min-reduced
+    per shard — the points are concatenated per-shard-contiguous so
     ``np.minimum.reduceat`` does the reduction without a Python loop.
     For l2 the squared distance is used (monotonic — routing only
     compares)."""
-    pts = [_routing_points(t) for t in shard_list]
-    seg_starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
-    return _route_dists_from_points(metric, qmat, pts, seg_starts)
-
-
-def _route_dists_from_points(
-    metric, qmat: np.ndarray, pts: list, seg_starts: list
-) -> np.ndarray:
-    """Metric core of :func:`_shard_route_dists`, shared with the
-    serving dispatch (which holds routing points, not shard tuples):
-    ``pts`` is a per-shard list of routing-point matrices, reduced
-    segment-min over the concatenation."""
+    seg_starts = np.cumsum([0] + [len(p) for p in pts[:-1]])
     if metric == "hamming":
         # packed words stay in INTEGER dtype end-to-end: a float64 round
         # trip has a 53-bit mantissa and silently zeroes the low ~11 bits
@@ -866,9 +725,7 @@ def _route_dists_from_points(
                 .reshape(len(qi), -1)
                 .sum(axis=1)
             )
-        return np.minimum.reduceat(
-            d, np.array(seg_starts, dtype=np.int64), axis=1
-        )
+        return np.minimum.reduceat(d, seg_starts, axis=1)
     P = np.concatenate(pts).astype(np.float32)
     q = np.asarray(qmat, dtype=P.dtype)
     if metric == "l2":
@@ -885,61 +742,4 @@ def _route_dists_from_points(
         d = 1.0 - np.where(denom > 0, num / np.where(denom > 0, denom, 1.0), 0.0)
     else:
         raise ValueError(f"unsupported routing metric {metric!r}")
-    return np.minimum.reduceat(d, np.array(seg_starts, dtype=np.int64), axis=1)
-
-
-def broadcast_search(
-    queries: DataFrame,
-    index_vectors: DataFrame,
-    index_graph: DataFrame,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    shards_bc=None,
-) -> DataFrame:
-    """ZERO-shuffle search for indexes that fit executor memory:
-    :func:`serve_blocks` reading shards from a Spark broadcast of the
-    whole index (:func:`materialize_shards` output). This is the regime
-    the reference actually benchmarks (a SIFT1M index resident in RAM,
-    queried by a parallel batch — README.md:120-134); use
-    :func:`cached_scan_search` when the index exceeds the broadcast
-    budget.
-
-    ``shard_probes``: search only the p nearest shards (IVF-style
-    routing over the Vamana shards). ``None`` scans every shard — the
-    exact shard-and-merge semantics (README.md:157); fewer probes trade
-    recall for a proportional QPS gain, the knob that matters when
-    num_shards is large. ``'auto'`` derives the probe set per query from
-    the routing geometry (:func:`_probe_mask`) — use it when the shard
-    count is high and the pieces-per-cluster factor is unknown. A
-    shard's distance is the MIN over its routing points — medoid plus
-    the FPS-sampled entry set — not the medoid alone: a single medoid
-    misroutes queries near overlap-cell boundaries (r2 measured probed4
-    recall 0.7586 routing on medoids; the entry sets cover each shard's
-    extent by construction).
-
-    ``shards_bc``: a prebuilt broadcast of :func:`materialize_shards`
-    output. None materializes and broadcasts here, taking the routing
-    points and ``dim`` from the driver-side dict; with a prebuilt
-    broadcast a probed batch routes through :func:`_routing_job` (the
-    driver never reads ``.value``, which would re-unpickle the whole
-    index). DiskANNIndex calls :func:`serve_blocks` itself, with the
-    routing points it kept when it broadcast.
-    """
-    spark = queries.sparkSession
-    dim = routing = None
-    if shards_bc is None:
-        shards = materialize_shards(index_vectors, index_graph, params)
-        routing = {s: _routing_points(t) for s, t in shards.items()}
-        dim = next((t[1].shape[1] for t in shards.values()), None)
-        shards_bc = spark.sparkContext.broadcast(shards)
-    get_shard = _broadcast_accessor(shards_bc)
-    if routing is None:
-
-        def routing():
-            return _routing_job(spark, params.num_shards, get_shard,
-                                params.metric)
-
-    return serve_blocks(queries, get_shard, params, dim, k, beam_width,
-                        shard_probes, routing)
+    return np.minimum.reduceat(d, seg_starts, axis=1)

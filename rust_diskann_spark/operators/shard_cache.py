@@ -194,12 +194,13 @@ def load_shard(root: str, token: str, sid: int):
 
 
 def decode_shard_from_parquet(index_path: str, sid: int, metric: str):
-    """Decode ONE shard straight from the index parquet, executor-side.
+    """Decode ONE shard straight from the index parquet.
 
     Partition pruning does the shard selection (both tables are written
     ``partitionBy("shard")``), so the read touches only this shard's
-    files — no Spark job, no shuffle, no driver. This is both the cache
-    miss path and the multi-node first-touch path."""
+    files — no Spark job, no shuffle. This is the cache miss path and
+    the multi-node first-touch path on executors, and broadcast
+    residency's decode on the driver (``DiskANNIndex._broadcast_shards``)."""
     import pyarrow.dataset as ds
 
     vset = ds.dataset(

@@ -143,6 +143,13 @@ class DiskANNIndex:
         the node-local mmap cache through the same dispatch and block
         plan, only with the cache's shard accessor.
 
+        The driver decodes every shard the way an mmap-cache miss does,
+        straight from the index parquet at ``self.path`` with pyarrow
+        partition pruning (``shard_cache.decode_shard_from_parquet``):
+        no Spark job, one shard's tables in flight at a time. Empty
+        shards are left out of the dict. The routing points are taken
+        from the decoded dict before it is broadcast.
+
         Infeasible means an explicit ``mode="broadcast"`` on an index
         whose per-worker copies would not fit (:meth:`_broadcast_feasible`):
         the cache keeps one page-cache copy per node rather than one
@@ -158,9 +165,11 @@ class DiskANNIndex:
         if self._shards_bc is None and (
             self._fits_broadcast() or self._broadcast_feasible()
         ):
-            shards = search_ops.materialize_shards(
-                self.vectors, self.graph, self.params
-            )
+            shards = {
+                s: t for s in range(self.meta.num_shards)
+                if (t := shard_cache.decode_shard_from_parquet(
+                    self.path, s, self.meta.metric)) is not None
+            }
             self._bc_routing = {
                 s: search_ops._routing_points(t) for s, t in shards.items()
             }
@@ -169,9 +178,15 @@ class DiskANNIndex:
 
     def _get_scan_routing(self):
         if self._scan_routing is None:
-            self._scan_routing = search_ops.cached_scan_routing(
-                self.spark, self.meta.num_shards, self.path,
-                self._get_cache_token(), shard_cache.cache_root(),
+            # each task reads its shards through the mmap cache,
+            # populating it on first touch, so this job doubles as the
+            # cache warm
+            self._scan_routing = search_ops._routing_job(
+                self.spark, self.meta.num_shards,
+                search_ops._cache_accessor(
+                    shard_cache.cache_root(), self._get_cache_token(),
+                    self.path, self.meta.metric,
+                ),
                 self.meta.metric,
             )
         return self._scan_routing
@@ -333,11 +348,9 @@ class DiskANNIndex:
           broadcast NOW — measured 3.7x first-batch throughput otherwise
           lost to worker-side index load (the reference likewise
           excludes open/mmap from its QPS). The lazy ``vectors``/
-          ``graph`` DataFrames are NOT persisted here: broadcast-mode
-          searches never read them, and caching 1M-row array columns
-          just to feed the one-time Arrow collect cost the old warm a
-          full extra scan of the index (r4: warm 487 s -> the collect
-          itself is seconds once the join/persist work is gone).
+          ``graph`` DataFrames are NOT persisted here: broadcast
+          residency never reads them, it decodes the shards straight
+          from the index parquet (:meth:`_broadcast_shards`).
         - mmap cache (scan, or an infeasible explicit broadcast): run the
           routing job — the shards spread over at most one task per
           core, each task decodes its shards into the node-local mmap

@@ -2,8 +2,9 @@
 on-disk index — no Spark, so kernel-level changes can be measured in
 isolation from scheduling/Arrow/host-weather effects.
 
-Loads <index_dir> with pyarrow exactly the way materialize_shards
-decodes a shard (id-sorted rows, padded adjacency, int8 traversal view),
+Loads <index_dir> with pyarrow exactly the way
+shard_cache.decode_shard_from_parquet decodes a shard for both residency
+models (id-sorted rows, padded adjacency, int8 traversal view),
 then times beam_search_batch per beam width and reports single-proc QPS
 plus recall@10 against a brute-force GT over a query sample.
 

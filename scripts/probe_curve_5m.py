@@ -5,7 +5,7 @@ The auto-probe mask is a pure driver-side function of routing
 distances (operators/search.py:_probe_mask) — no search needs to run
 to know how many shards each tau touches. This script loads the
 routing points (medoid + FPS entry set per shard, the same rows
-cached_scan_routing / _shard_route_dists use) and the standard probe5m
+operators/search.py:_routing_points picks) and the standard probe5m
 query sample (id % stride == 0) via DuckDB, computes the production
 routing-distance matrix with _route_dists_from_points, and reports
 mean/p50/p95 probes per query for a tau sweep — one process, no Spark,
@@ -74,8 +74,7 @@ def main() -> None:
     qmat = np.stack([vecs[i] for i in qids])
     sids = sorted(routing_ids)
     pts = [np.stack([vecs[i] for i in routing_ids[s]]) for s in sids]
-    starts = np.cumsum([0] + [len(p) for p in pts[:-1]]).tolist()
-    dmat = _route_dists_from_points(meta["metric"], qmat, pts, starts)
+    dmat = _route_dists_from_points(meta["metric"], qmat, pts)
 
     out = {
         "metric": "probe_curve",

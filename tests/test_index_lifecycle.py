@@ -127,13 +127,10 @@ def test_hamming_index_end_to_end(spark, tmp_path):
         assert r["id"] == qid and r["dist"] == 0.0
 
 
-def test_broadcast_and_cogroup_search_agree(spark, tmp_path):
-    """The two physical search strategies (broadcast index vs cached
-    scan of the mmap shard cache) are alternative plans for the same
-    logical query — results must match row-for-row. The name is kept so
-    the test keeps its history; the cogrouped strategy is gone."""
-    from rust_diskann_spark.operators import search as search_ops
-
+def test_broadcast_and_scan_search_agree(spark, tmp_path):
+    """The two residency models (broadcast index vs the mmap shard
+    cache) serve the same logical query — results must match
+    row-for-row."""
     rng = np.random.default_rng(9)
     mat = rng.standard_normal((300, 8)).astype(np.float32)
     df = _vec_df(spark, [(i, mat[i].tolist()) for i in range(300)])
@@ -144,9 +141,7 @@ def test_broadcast_and_cogroup_search_agree(spark, tmp_path):
     q = _vec_df(spark, [(i, mat[i].tolist()) for i in range(0, 300, 30)]).select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    via_bc = search_ops.broadcast_search(
-        q, idx.vectors, idx.graph, idx.params, k=5, beam_width=32
-    )
+    via_bc = idx.search_with_dists(q, k=5, beam_width=32, mode="broadcast")
     via_cg = idx.search_with_dists(q, k=5, beam_width=32, mode="scan")
     rows_bc = sorted(map(tuple, via_bc.collect()))
     rows_cg = sorted(map(tuple, via_cg.collect()))

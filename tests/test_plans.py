@@ -303,12 +303,11 @@ def test_scan_search_plan_has_no_window_or_exchange(spark, emb, tmp_path,
     idx.close()
 
 
-def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypatch):
+def test_auto_mode_oversized_batch_streams_in_chunks(spark, sf_dir, monkeypatch):
     """A query batch over the scan collect cap runs through the cached
     scan in cap-sized chunks (one collect + broadcast each, no merge),
     in auto and in explicit scan mode, with and without shard routing —
-    row for row the same as broadcast mode. The name is kept so the test
-    keeps its history; there is no cogroup fallback any more."""
+    row for row the same as broadcast mode."""
     import tempfile, shutil, os as _os
 
     from rust_diskann_spark import IndexParams, build_index
@@ -350,9 +349,9 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
     # probes exactly the shards broadcast mode probes, and the routing
     # job runs once for the handle, not once per chunk
     routing_jobs = []
-    real_routing = search_ops.cached_scan_routing
+    real_routing = search_ops._routing_job
     monkeypatch.setattr(
-        search_ops, "cached_scan_routing",
+        search_ops, "_routing_job",
         lambda *a, **kw: routing_jobs.append(1) or real_routing(*a, **kw),
     )
     for mode in ("auto", "scan"):
@@ -429,6 +428,14 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
     )
     with pytest.raises(ValueError, match=valid):
         idx.search_with_dists(q, k=1, beam_width=8, mode="cogroup")
+    # so is the retired piece-group mode, and a typo of it
+    with pytest.raises(ValueError, match="grouped"):
+        idx.warm("grouped")
+    with pytest.raises(ValueError, match="auto|broadcast|scan"):
+        idx.warm("groupd")
+    # no rejected mode pinned any residency state
+    assert idx._shards_bc is None and idx._scan_routing is None
+    idx.close()
 
 
 def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
@@ -472,61 +479,65 @@ def test_close_releases_cached_state(spark, tmp_path, monkeypatch):
     assert res.count() == 3
 
 
-def test_materialize_shards_in_memory_fallback(spark):
-    """r4 ADVICE: materialize_shards on a NON-file-backed frame must not
-    re-execute the lineage once per shard — it falls back to one collect
-    per table, split driver-side. Checked by behavior: correct output from
-    in-memory frames (the per-shard filter path would also 'work', so the
-    companion validation test below pins the shared decode path)."""
-    from rust_diskann_spark.operators import search as search_ops
-    from rust_diskann_spark.params import IndexParams
+def _write_index_tables(root, vec_rows, g_rows):
+    """Hive-partitioned ``vectors.parquet``/``graph.parquet`` under
+    ``root``, laid out like index_store writes them: one
+    ``shard=<s>`` directory per shard, the shard column in the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, rows, cols, types):
+        tbl = pa.table(
+            {c: [r[i] for r in rows] for i, c in enumerate(cols)},
+            schema=pa.schema(list(zip(cols, types))),
+        )
+        pq.write_to_dataset(tbl, os.path.join(root, name),
+                            partition_cols=["shard"])
+
+    write("vectors.parquet", vec_rows, ["shard", "id", "vec"],
+          [pa.int32(), pa.int64(), pa.list_(pa.float32())])
+    write("graph.parquet", g_rows, ["shard", "id", "neighbors", "medoid"],
+          [pa.int32(), pa.int64(), pa.list_(pa.int64()), pa.int64()])
+    return str(root)
+
+
+def test_decode_shards_from_parquet_fixture(tmp_path):
+    """The shard decoder both residency models use reads each shard of
+    a partitioned index straight from its parquet: id-sorted rows and an
+    (n, dim) vector matrix per shard; a shard id with no rows decodes to
+    None and is left out."""
+    from rust_diskann_spark.operators import shard_cache
 
     vec_rows = [(i % 2, i, [float(i)] * 4) for i in range(8)]
-    vectors = spark.createDataFrame(
-        vec_rows, "shard int, id long, vec array<float>"
-    )
     g_rows = [
         (i % 2, i, [j for j in range(8) if j % 2 == i % 2 and j != i], i % 2)
         for i in range(8)
     ]
-    graph = spark.createDataFrame(
-        g_rows, "shard int, id long, neighbors array<long>, medoid long"
-    )
-    assert not vectors.inputFiles()  # precondition: truly in-memory
-    shards = search_ops.materialize_shards(
-        vectors, graph, IndexParams(metric="l2", num_shards=2)
-    )
+    path = _write_index_tables(tmp_path, vec_rows, g_rows)
+    shards = {
+        s: t for s in range(3)
+        if (t := shard_cache.decode_shard_from_parquet(path, s, "l2"))
+        is not None
+    }
     assert set(shards) == {0, 1}
     gids0 = shards[0][0]
     assert list(gids0) == [0, 2, 4, 6]
     assert shards[0][1].shape == (4, 4)
 
 
-def test_corrupt_index_neighbor_ids_raise(spark):
+def test_corrupt_index_neighbor_ids_raise(tmp_path):
     """r4 ADVICE: an out-of-shard neighbor/medoid id must raise loudly —
     bare searchsorted aliased it to an arbitrary local ordinal and
     returned silently wrong neighbors."""
-    from rust_diskann_spark.operators import search as search_ops
-    from rust_diskann_spark.params import IndexParams
+    from rust_diskann_spark.operators import shard_cache
 
     vec_rows = [(0, i, [float(i)] * 4) for i in range(6)]
-    vectors = spark.createDataFrame(
-        vec_rows, "shard int, id long, vec array<float>"
-    )
     g_rows = [(0, i, [(i + 1) % 6, 99], 0) for i in range(6)]  # 99 absent
-    graph = spark.createDataFrame(
-        g_rows, "shard int, id long, neighbors array<long>, medoid long"
-    )
+    path = _write_index_tables(tmp_path / "nb", vec_rows, g_rows)
     with pytest.raises(ValueError, match="neighbor id"):
-        search_ops.materialize_shards(
-            vectors, graph, IndexParams(metric="l2", num_shards=1)
-        )
+        shard_cache.decode_shard_from_parquet(path, 0, "l2")
     # medoid validation on the same path
     g_rows2 = [(0, i, [(i + 1) % 6], 42) for i in range(6)]  # medoid absent
-    graph2 = spark.createDataFrame(
-        g_rows2, "shard int, id long, neighbors array<long>, medoid long"
-    )
+    path2 = _write_index_tables(tmp_path / "med", vec_rows, g_rows2)
     with pytest.raises(ValueError, match="medoid id"):
-        search_ops.materialize_shards(
-            vectors, graph2, IndexParams(metric="l2", num_shards=1)
-        )
+        shard_cache.decode_shard_from_parquet(path2, 0, "l2")

@@ -55,11 +55,10 @@ def idx_path(spark, tmp_path, monkeypatch):
     return path
 
 
-def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path):
-    """Scan-all cached scan vs broadcast mode, bit for bit. Broadcast is
-    the reference now that the JVM-persisted scan path is gone; the name
-    is kept so the test keeps its history. One query_id repeats with
-    another vector: both modes give each query row its own top-k."""
+def test_cached_scan_matches_broadcast(spark, idx_path):
+    """Scan-all cached scan vs broadcast mode, bit for bit. One query_id
+    repeats with another vector: both modes give each query row its own
+    top-k."""
     q = _queries(spark, _corpus(spark), repeat=True)
     idx = open_index(spark, idx_path)
     res_bc = _rows(idx.search_with_dists(q, k=5, beam_width=32,
@@ -90,12 +89,11 @@ def test_cached_scan_plan_ships_no_corpus(spark, idx_path):
     idx.close()
 
 
-def test_cached_probed_matches_legacy_probed(spark, idx_path):
+def test_cached_probed_matches_broadcast_probed(spark, idx_path):
     """Probed cached scan vs probed broadcast mode at the same
     ``shard_probes``: both route on each shard's medoid + entry points,
-    so they must probe the same shards and agree bit for bit. Broadcast
-    is the reference now that the JVM-persisted scan path is gone; the
-    name is kept so the test keeps its history. One query_id repeats."""
+    so they must probe the same shards and agree bit for bit. One
+    query_id repeats."""
     q = _queries(spark, _corpus(spark), repeat=True)
     idx = open_index(spark, idx_path)
     for probes in (2, "auto"):
@@ -491,6 +489,51 @@ def test_broadcast_dispatch_is_query_blocks(spark, tmp_path, monkeypatch):
     idx.close()
 
 
+def test_broadcast_residency_decodes_without_spark_jobs(spark, tmp_path,
+                                                        monkeypatch):
+    """Broadcast residency decodes each shard on the driver straight from
+    the index parquet, the way an mmap-cache miss does: building the
+    shard broadcast runs no Spark job, and every broadcast tuple equals
+    the mmap cache's tuple for that shard, array for array."""
+    monkeypatch.setenv("RDS_SCAN_CACHE_DIR", str(tmp_path / "cache"))
+    path = str(tmp_path / "idx3")
+    build_index(
+        _corpus(spark, n=300), path,
+        IndexParams(max_degree=8, build_beam_width=16, num_shards=3,
+                    seed=23),
+    )
+    idx = open_index(spark, path)
+    sc = spark.sparkContext
+    group = "broadcast-residency-decode"
+    sc.setJobGroup(group, "broadcast residency decode")
+    try:
+        bc = idx._broadcast_shards()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert isinstance(bc, Broadcast)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    shards = bc.value
+    assert sorted(shards) == [0, 1, 2]
+    assert sorted(idx._bc_routing) == [0, 1, 2]
+
+    def arrays(tup):
+        gids, mat, graph, medoid_local, sqn, ent, quant = tup
+        out = [gids, mat, graph.adj, graph.deg, np.asarray(medoid_local),
+               sqn, ent]
+        if quant is not None:
+            out += [quant.codes, quant.sqn_q, np.asarray(quant.scale)]
+        return out
+
+    root, token = shard_cache.cache_root(), idx._get_cache_token()
+    for sid, tup in shards.items():
+        cached = shard_cache.get_or_decode(root, token, sid, path, "l2")
+        for a, b in zip(arrays(tup), arrays(cached), strict=True):
+            assert (a is None) == (b is None)
+            if a is not None:
+                np.testing.assert_array_equal(a, b)
+    idx.close()
+
+
 def _bad_queries(spark, case):
     """A 3-query batch whose query_id 7 row is bad in the named way; for
     ``"dim"`` every row has the wrong dimension, so the whole batch is
@@ -632,7 +675,7 @@ def test_drop_nested_zip_finders_keeps_top_level(tmp_path):
     import zipfile
     import zipimport
 
-    from rust_diskann_spark.operators.search import _drop_nested_zip_finders
+    from rust_diskann_spark.prelude import _drop_nested_zip_finders
 
     archive = str(tmp_path / "nested.zip")
     with zipfile.ZipFile(archive, "w") as zf:

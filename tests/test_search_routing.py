@@ -7,7 +7,11 @@ import numpy as np
 import pytest
 
 from rust_diskann_spark.core import vamana
-from rust_diskann_spark.operators.search import _probe_mask, _shard_route_dists
+from rust_diskann_spark.operators.search import (
+    _probe_mask,
+    _route_dists_from_points,
+    _routing_points,
+)
 
 
 def _shard(mat, medoid_local, ent):
@@ -27,7 +31,8 @@ def test_routing_uses_entry_points_not_just_medoid():
     s0 = _shard(m0, 0, np.array([1], dtype=np.int64))  # entry = origin
     s1 = _shard(m1, 0, None)
     q = np.zeros((1, 2), dtype=np.float32)
-    d = _shard_route_dists("l2", q, [s0, s1])
+    d = _route_dists_from_points("l2", q, [_routing_points(s0),
+                                           _routing_points(s1)])
     assert d.shape == (1, 2)
     assert d[0, 0] < d[0, 1]  # entry point wins over nearer medoid
 
@@ -40,7 +45,8 @@ def test_routing_matches_bruteforce_min_l2():
         ent = rng.choice(40, 6, replace=False).astype(np.int64)
         shards.append(_shard(mat, int(rng.integers(40)), ent))
     q = rng.standard_normal((20, 8)).astype(np.float32)
-    d = _shard_route_dists("l2", q, shards)
+    d = _route_dists_from_points("l2", q,
+                                 [_routing_points(s) for s in shards])
     for si, (gids, mat, graph, med, sqn, ent) in enumerate(shards):
         pts = mat[np.array(sorted({med, *ent.tolist()}), dtype=np.int64)]
         for qi in range(len(q)):
@@ -58,15 +64,17 @@ def test_routing_cosine_and_hamming_shapes():
         for _ in range(3)
     ]
     q = rng.standard_normal((7, 4)).astype(np.float32)
-    assert _shard_route_dists("cosine", q, shards_f).shape == (7, 3)
-    assert _shard_route_dists("dot", q, shards_f).shape == (7, 3)
+    pts_f = [_routing_points(s) for s in shards_f]
+    assert _route_dists_from_points("cosine", q, pts_f).shape == (7, 3)
+    assert _route_dists_from_points("dot", q, pts_f).shape == (7, 3)
     shards_h = [
         (np.arange(6), rng.integers(0, 2**20, (6, 2)).astype(np.int64), None,
          0, None, np.array([1], dtype=np.int64))
         for _ in range(2)
     ]
     qh = rng.integers(0, 2**20, (5, 2)).astype(np.int64)
-    dh = _shard_route_dists("hamming", qh, shards_h)
+    dh = _route_dists_from_points("hamming", qh,
+                                  [_routing_points(s) for s in shards_h])
     assert dh.shape == (5, 2)
     assert (dh >= 0).all()
 
@@ -146,7 +154,8 @@ def test_routing_hamming_exact_above_2_53():
     s0 = (np.arange(2), m0, None, 0, None, np.array([1], dtype=np.int64))
     s1 = (np.arange(2), m1, None, 0, None, np.array([1], dtype=np.int64))
     q = np.array([[base]], dtype=np.int64)
-    d = _shard_route_dists("hamming", q, [s0, s1])
+    d = _route_dists_from_points("hamming", q, [_routing_points(s0),
+                                                _routing_points(s1)])
     # exact: min popcount per shard — s0: min(0, 3) = 0; s1: min(64-popcount... )
     assert d[0, 0] == 0.0
     exp1 = min(
