@@ -428,11 +428,6 @@ def test_warm_rejects_unknown_mode(spark, tmp_path):
     )
     with pytest.raises(ValueError, match=valid):
         idx.search_with_dists(q, k=1, beam_width=8, mode="cogroup")
-    # so is the retired piece-group mode, and a typo of it
-    with pytest.raises(ValueError, match="grouped"):
-        idx.warm("grouped")
-    with pytest.raises(ValueError, match="auto|broadcast|scan"):
-        idx.warm("groupd")
     # no rejected mode pinned any residency state
     assert idx._shards_bc is None and idx._scan_routing is None
     idx.close()
